@@ -22,6 +22,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** `SPARK_GRAFT_CPUS` as a core count, `default` when unset. Every
+    * harness main sizes its session through this, so a malformed value
+    * fails here instead of reaching the session master, the contract
+    * JSON or an artifact file name. */
+  def cpusFromEnv(default: Int): Int =
+    parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString))
+
+  private[graft] def parseCpus(raw: String): Int = {
+    val n = raw.toIntOption.filter(_ >= 1)
+    require(n.isDefined, s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$raw'")
+    n.get
+  }
+
   private def loadavg(): String =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
@@ -60,7 +73,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpusFromEnv(32)
     // diagnosis knobs (adjudicating pass-level drift): restrict to a
     // query subset / disable the per-run System.gc() — fresh-JVM subset
     // runs with these are how a diffuse pass-level reading is separated
@@ -96,7 +109,7 @@ object Bench {
     def newSession(): SparkSession = {
       val b = SparkSession.builder()
         .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", cpus.toString)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -16,10 +16,10 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query...>")
     val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpusFromEnv(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

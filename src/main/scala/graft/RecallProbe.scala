@@ -19,10 +19,10 @@ object RecallProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = if (args.length > 0) args(0).toInt else 10
     val nQueries = if (args.length > 1) args(1).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = Bench.cpusFromEnv(16)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -39,11 +39,11 @@ import org.apache.spark.sql.functions._
 object ScaleCheck {
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = Bench.cpusFromEnv(16)
     // On a real cluster shuffle parallelism scales with data; a fixed
     // local partition count under-parallelizes the scaled run and
     // overstates the exponent — override to test that hypothesis.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import OwnDirs.fileSystem
+
 /** Staged truncate-then-load for file destinations (SURVEY §7.5.6): the
   * reference does TRUNCATE + INSERT + single COMMIT in one destination
   * transaction; Spark's file committer alone leaves a window where the
@@ -59,7 +61,7 @@ object AtomicParquet {
   def read(spark: SparkSession, destDir: String): DataFrame = {
     val fs = fileSystem(spark, destDir)
     recoverIfNeeded(fs, new HPath(destDir), new HPath(destDir + ".__old__"))
-    spark.read.parquet(destDir)
+    OwnDirs.readParquet(spark, destDir)
   }
 
   /** True when `destDir` currently exists (post-recovery) on its FS. */
@@ -69,9 +71,6 @@ object AtomicParquet {
     recoverIfNeeded(fs, dest, new HPath(destDir + ".__old__"))
     fs.exists(dest)
   }
-
-  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
-    new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def recoverIfNeeded(fs: FileSystem, dest: HPath, backup: HPath): Unit =
     if (!fs.exists(dest) && fs.exists(backup) && !fs.rename(backup, dest))

@@ -80,10 +80,8 @@ object BloomIndex {
     * fingerprint: the index is keyed per file, so any compaction,
     * recluster, or append changes this set and invalidates the index. */
   private def currentFiles(spark: SparkSession, tableDir: String): Set[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p)
+    val fs = OwnDirs.fileSystem(spark, tableDir)
+    fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toUri.getPath).toSet
   }
@@ -184,7 +182,7 @@ object BloomIndex {
     (_, staging) => {
       val spark = df.sparkSession
       val agg = udaf(new BuildAgg(expectedItemsPerFile, fpp))
-      val idx = spark.read.parquet(staging.toString)
+      val idx = OwnDirs.readParquet(spark, staging.toString)
         .select(
           element_at(split(input_file_name(), "/"), -1).as("file"),
           col(keyCol).cast("long").as("k"))
@@ -204,7 +202,7 @@ object BloomIndex {
   def forVersion(spark: SparkSession, tableDir: String,
       version: Option[Long] = None): DataFrame = {
     val dir = versionDir(spark, tableDir, version)
-    spark.read.parquet(s"$dir/_bloom")
+    OwnDirs.readParquet(spark, s"$dir/_bloom")
       .withColumn("file", concat(lit(s"$dir/"), col("file")))
   }
 

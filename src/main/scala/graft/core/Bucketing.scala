@@ -32,7 +32,7 @@ object Bucketing {
     val loc = new org.apache.hadoop.fs.Path(
       spark.sessionState.catalog.defaultTablePath(
         spark.sessionState.sqlParser.parseTableIdentifier(table)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = OwnDirs.fileSystem(spark, loc.toString)
     if (fs.exists(loc)) fs.delete(loc, true)
     val sorts = if (sortCols.nonEmpty) sortCols else bucketCols
     df.repartition(nBuckets, bucketCols.map(col): _*)

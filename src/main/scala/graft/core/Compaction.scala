@@ -24,8 +24,7 @@ object Compaction {
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Long, Int) = {
     require(targetBytes > 0, s"bad targetBytes=$targetBytes")
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = OwnDirs.fileSystem(spark, dir)
     def dataFiles() = fs.listStatus(new HPath(dir))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val before = dataFiles()
@@ -50,8 +49,7 @@ object Compaction {
       colB: String, boundsB: (Double, Double),
       targetBytes: Long = 128L * 1024 * 1024): (Int, Long, Int) = {
     require(targetBytes > 0, s"bad targetBytes=$targetBytes")
-    val fs = new HPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = OwnDirs.fileSystem(spark, dir)
     def dataFiles() = fs.listStatus(new HPath(dir))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val before = dataFiles()
@@ -94,8 +92,7 @@ object Compaction {
     require(vs.nonEmpty, s"no committed versions at $tableDir")
     val tag = s"squash-${vs.max}"
     if (Snapshots.taggedVersion(spark, tableDir, tag).isDefined) return None
-    val fs = new HPath(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = OwnDirs.fileSystem(spark, tableDir)
     // single-version history that IS a squash output: nothing to do
     // (the crashed-rerun case is the tag check above; this catches the
     // "maintenance fired twice with no new batches" case)

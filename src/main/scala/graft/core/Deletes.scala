@@ -1,9 +1,11 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import OwnDirs.fileSystem
 
 /** Merge-on-read equality deletes for [[Snapshots]] tables whose
   * versions are per-batch deltas ([[graft.streaming.SnapshotSink]]) —
@@ -98,7 +100,7 @@ object Deletes {
       s"Deletes.commitDeletes: no committed versions at $tableDir " +
         "(a delete against an empty table has nothing to define its schema)")
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Snapshots.read(spark, tableDir, Some(vs.max)).schema)
+      OwnDirs.readParquet(spark, Snapshots.versionDir(tableDir, vs.max)).schema)
   }
 
   // no coalesce(1): a CDC delete batch can be corpus-scale, and a
@@ -113,7 +115,13 @@ object Deletes {
     * of every committed delta version up to it, minus rows matched by a
     * delete committed at a LATER version than the row's. Delta-table
     * contract (same as [[Compaction.squashVersions]]): versions are
-    * appends, not full copies. */
+    * appends, not full copies.
+    *
+    * Read cost: building the frame launches no Spark job. It lists the
+    * committed versions and their `_deletes` dirs once, then reads one
+    * footer per version data dir and per `_deletes` dir on the driver
+    * (each dir's schema resolved on its own, so a strict read still
+    * fails on schema drift). */
   def readMerged(spark: SparkSession, tableDir: String,
       version: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
     val fs = fileSystem(spark, tableDir)
@@ -125,15 +133,21 @@ object Deletes {
     // opt-in on read): versions written before a column existed read it
     // as null. Strict by default so an accidental schema drift fails
     // loudly instead of null-filling.
-    val data = vs.map(v => Snapshots.read(spark, tableDir, Some(v))
-        .withColumn("_v", lit(v)))
+    val data = vs.map(v =>
+        OwnDirs.readParquet(spark, Snapshots.versionDir(tableDir, v))
+          .withColumn("_v", lit(v)))
       .reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
+    val withDeletes = Option(fs.globStatus(
+        new HPath(tableDir, s"v=*/$DeleteDir")))
+      .getOrElse(Array.empty).toSeq
+      .flatMap(s => Snapshots.versionOf(s.getPath.getParent.getName))
+      .toSet
     // one anti-join per DISTINCT key-column set (usually exactly one)
     val deletes = vs
-      .filter(v => fs.exists(new HPath(tableDir, s"v=$v/$DeleteDir")))
+      .filter(withDeletes)
       .map { v =>
-        val k = spark.read.parquet(
-          new HPath(tableDir, s"v=$v/$DeleteDir").toString)
+        val k = OwnDirs.readParquet(spark,
+          new HPath(Snapshots.versionDir(tableDir, v), DeleteDir).toString)
         (k.columns.sorted.toSeq, k.withColumn("_dv", lit(v)))
       }
       .groupBy(_._1)
@@ -186,7 +200,4 @@ object Deletes {
     out.foreach(_ => Snapshots.prune(spark, tableDir, keep = 1))
     out
   }
-
-  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
-    new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
 }

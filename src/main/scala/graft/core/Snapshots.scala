@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import OwnDirs.fileSystem
+
 /** Versioned parquet tables with time travel — the minimal snapshot
   * protocol a 100 TB pipeline needs for "reprocess against yesterday's
   * input" and "oops, roll back the bad load", without adopting a full
@@ -43,6 +45,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * races an in-flight commit. Like AtomicParquet, the guarantees need
   * atomic create/rename — local FS and HDFS, not copy-based object
   * stores.
+  *
+  * Read cost: [[read]] lists `_commits` and `v=*` once and reads one
+  * data file's footer of the resolved version on the driver; building
+  * the DataFrame launches no Spark job (no schema inference — the
+  * schema Spark stored in the footer is the one inference would return).
   */
 object Snapshots {
 
@@ -175,8 +182,13 @@ object Snapshots {
     val v = version.getOrElse(vs.max)
     require(vs.contains(v),
       s"version $v not committed at $tableDir (have ${vs.sorted.mkString(",")})")
-    spark.read.parquet(new HPath(tableDir, s"v=$v").toString)
+    OwnDirs.readParquet(spark, versionDir(tableDir, v))
   }
+
+  /** The data directory of version `v` — read it only once `v` is
+    * resolved as committed. */
+  private[core] def versionDir(tableDir: String, v: Long): String =
+    new HPath(tableDir, s"v=$v").toString
 
   /** Committed versions, ascending. */
   def versions(spark: SparkSession, tableDir: String): Seq[Long] =
@@ -318,7 +330,7 @@ object Snapshots {
     orphans.map(_._1).sorted
   }
 
-  private def versionOf(dirName: String): Option[Long] =
+  private[core] def versionOf(dirName: String): Option[Long] =
     if (dirName.startsWith("v=")) dirName.drop(2).toLongOption else None
 
   /** Marker files present (claimed numbers, committed or dead). */
@@ -348,7 +360,4 @@ object Snapshots {
     val all = committedMarkers(fs, tableDir) ++ dataDirVersions(fs, tableDir)
     (if (all.isEmpty) 0L else all.max) + 1
   }
-
-  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
-    new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
 }

@@ -105,7 +105,7 @@ object ZoneMap {
     val indexed = index.select(col("file")).collect()
       .map(r => new java.net.URI(r.getString(0)).getPath).toSet
     val p = new HPath(tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = OwnDirs.fileSystem(spark, tableDir)
     val current = fs.listStatus(p)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toUri.getPath).toSet
@@ -127,7 +127,7 @@ object ZoneMap {
     cols.foreach(c => requireOrderable(df, c))
     Snapshots.commitWith(df, tableDir, (_, staging) => {
       val spark = df.sparkSession
-      val idx = spark.read.parquet(staging.toString)
+      val idx = OwnDirs.readParquet(spark, staging.toString)
         .select(element_at(split(input_file_name(), "/"), -1).as("file") +:
           cols.map(col): _*)
         .groupBy(col("file"))
@@ -144,7 +144,7 @@ object ZoneMap {
     val v = version.getOrElse(Snapshots.versions(spark, tableDir).lastOption
       .getOrElse(sys.error(s"no committed versions under $tableDir")))
     val dir = s"$tableDir/v=$v"
-    spark.read.parquet(s"$dir/_zonemap")
+    OwnDirs.readParquet(spark, s"$dir/_zonemap")
       .withColumn("file", concat(lit(s"$dir/"), col("file")))
   }
 }

@@ -1,6 +1,10 @@
 package graft.core
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 
@@ -187,5 +191,98 @@ class DeletesSpec extends SparkSpec {
     assert(v.isDefined)
     val got = Snapshots.read(spark, dir).select("k").as[Long].collect().toSet
     assert(got === Set(1L, 3L))
+  }
+
+  test("resolving committed versions launches no Spark job") {
+    val dir = tmp()
+    Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir)   // v1
+    Snapshots.commit(Seq((3L, "c")).toDF("k", "s"), dir)              // v2
+    Deletes.commitDeletes(spark, dir, Seq(2L).toDF("k"))              // v3
+    Snapshots.commit(Seq((4L, "d")).toDF("k", "s"), dir)              // v4
+    Deletes.commitUpsert(spark, dir,
+      Seq((1L, "a2")).toDF("k", "s"), Seq("k"))                     // v5
+    // count only this thread's jobs, by job group
+    val group = s"resolve-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "version resolution")
+    val merged =
+      try {
+        (1L to 5L).foreach(v => Snapshots.read(spark, dir, Some(v)))
+        Snapshots.read(spark, dir)
+        val m = Deletes.readMerged(spark, dir)
+        GraftTestBus.drain(sc)
+        m
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get === 0)
+    assert(rows(merged) === Set((1L, "a2"), (3L, "c"), (4L, "d")))
+  }
+
+  test("footer schema equals the inferred schema") {
+    val dir = tmp()
+    Snapshots.commit(spark.sql("""
+      SELECT id AS k,
+             CAST(id AS DECIMAL(18,2)) AS amount,
+             TIMESTAMP_NTZ'2024-01-01 00:00:00' + make_interval(0, 0, 0, CAST(id AS INT)) AS ts,
+             date_add(DATE'2024-01-01', CAST(id AS INT)) AS d,
+             id > 0 AS flag,
+             array(named_struct('a', id, 'b', IF(id = 1, NULL, 'x'))) AS arr,
+             map('m', CAST(id AS DOUBLE)) AS m,
+             IF(id % 2 = 0, NULL, CAST(id AS STRING)) AS s
+      FROM range(3)"""), dir)                                        // v1
+    Deletes.commitDeletes(spark, dir, Seq(1L).toDF("k"))              // v2
+    // v2 is an empty payload: its schema still comes from a footer
+    for (v <- Seq(1L, 2L)) {
+      assert(OwnDirs.footerSchema(spark, s"$dir/v=$v").isDefined)
+      val inferred = spark.read.parquet(s"$dir/v=$v").schema
+      assert(Snapshots.read(spark, dir, Some(v)).schema === inferred)
+    }
+    assert(OwnDirs.footerSchema(spark, s"$dir/v=2/_deletes").isDefined)
+    assert(OwnDirs.readParquet(spark, s"$dir/v=2/_deletes").schema ===
+      spark.read.parquet(s"$dir/v=2/_deletes").schema)
+    assert(Deletes.readMerged(spark, dir).select("k").as[Long]
+      .collect().toSet === Set(0L, 2L))
+  }
+
+  test("directories without a Spark footer read as before") {
+    val missing = s"${tmp()}/absent"
+    assert(OwnDirs.footerSchema(spark, missing).isEmpty)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      OwnDirs.readParquet(spark, missing)
+    }
+    // a partitioned layout keeps partition discovery
+    val parted = s"${tmp()}/parted"
+    Seq((1L, "a"), (2L, "b")).toDF("k", "p").write.partitionBy("p")
+      .parquet(parted)
+    assert(OwnDirs.footerSchema(spark, parted).isEmpty)
+    assert(OwnDirs.readParquet(spark, parted).schema ===
+      spark.read.parquet(parted).schema)
+    // a file from another parquet writer carries no Spark schema key
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val foreign = s"${tmp()}/foreign"
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 k; optional binary s (UTF8); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$foreign/part-0.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("k", 7L).append("s", "x"))
+    finally w.close()
+    assert(OwnDirs.footerSchema(spark, foreign).isEmpty)
+    val read = OwnDirs.readParquet(spark, foreign)
+    assert(read.schema === spark.read.parquet(foreign).schema)
+    assert(read.as[(Long, String)].collect().toSeq === Seq((7L, "x")))
   }
 }
