@@ -22,19 +22,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** `SPARK_GRAFT_CPUS` as a core count, `default` when unset. Every
-    * harness main sizes its session through this, so a malformed value
-    * fails here instead of reaching the session master, the contract
-    * JSON or an artifact file name. */
-  def cpusFromEnv(default: Int): Int =
-    parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString))
-
-  private[graft] def parseCpus(raw: String): Int = {
-    val n = raw.toIntOption.filter(_ >= 1)
-    require(n.isDefined, s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$raw'")
-    n.get
-  }
-
   private def loadavg(): String =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
@@ -71,9 +58,22 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
+  /** The contract line, printed last on stdout. It is parsed from the
+    * last 2000 chars of stdout, so the line carries totals only and stays
+    * under 300 chars; the per-query table is in `artifact` (None when the
+    * run wrote none). */
+  private[graft] def contractLine(results: Seq[(String, Double)],
+      sfDir: String, cpus: Int, artifact: Option[String]): String = {
+    val total = "%.3f".formatLocal(java.util.Locale.ROOT, results.map(_._2).sum)
+    val file = artifact.map(Harness.jsonString).getOrElse("null")
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""sf":${Harness.jsonString(sfDir)},"cpus":$cpus,""" +
+      s""""n_queries":${results.size},"artifact":$file}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpusFromEnv(32)
+    val cpus = Harness.cpusFromEnv(32)
     // diagnosis knobs (adjudicating pass-level drift): restrict to a
     // query subset / disable the per-run System.gc() — fresh-JVM subset
     // runs with these are how a diffuse pass-level reading is separated
@@ -94,56 +94,19 @@ object Bench {
     // block manager. A fresh SparkSession every `chunk` queries resets
     // the session-scoped share of that state while keeping the JVM's
     // JIT warmth; each chunk re-warms its own queries at sf0.01.
-    val chunk = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_CHUNK", "48")
-      val c =
-        try raw.toInt
-        catch { case _: NumberFormatException => sys.error(
-          s"SPARK_GRAFT_CHUNK must be an integer >= 1, got '$raw'") }
-      require(c >= 1, s"SPARK_GRAFT_CHUNK must be >= 1, got $c")
-      c
-    }
-    def picked = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
+    val chunk = Harness.positiveIntEnv("SPARK_GRAFT_CHUNK", 48)
+    val picked = SparkEntry.all.sortBy(_.name)
+      .filter(q => only.isEmpty || only(q.name))
 
-    def newSession(): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.ui.enabled", "false")
-      // diagnosis knob (config A/B on a subset run): extra session confs
-      // as "k=v;k=v" — never set in a graded pass; adopted configs are
-      // hardcoded above with their justification in OPTIMIZATION notes.
-      // Entries without '=' are rejected loudly and every injected conf
-      // is logged, so a contaminated run is detectable from its output.
-      sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";")
-        .map(_.trim).filter(_.nonEmpty).foreach { kv =>
-          kv.split("=", 2) match {
-            case Array(k, v) =>
-              System.err.println(s"[bench] EXTRA_CONF injected: $k=$v")
-              b.config(k, v)
-            case _ => sys.error(
-              s"SPARK_GRAFT_EXTRA_CONF entry lacks '=': '$kv'")
-          }
-        })
-      val s = b.getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
     def recycle(old: SparkSession): SparkSession = {
       old.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       System.gc() // release the stopped context's blocks/threads
-      newSession()
+      Harness.session(32)
     }
 
-    var spark = newSession()
+    var spark = Harness.session(32)
     val warmDir = "/root/testdata/sf0.01"
 
     // Warm a chunk's queries once at the smallest scale factor: Catalyst
@@ -151,9 +114,9 @@ object Bench {
     // costs (measured up to ~5s per complex query) that are noise at the
     // 100 TB design point — the timed runs measure steady-state
     // execution on the target scale factor.
-    def warm(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Unit = {
-      qs.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+    def warm(qs: Seq[Query]): Unit = {
+      qs.foreach { q =>
+        try q.plan(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
       }
       spark.catalog.clearCache() // drop warmup-phase persisted data
@@ -177,14 +140,13 @@ object Bench {
     val diag = scala.collection.mutable
       .LinkedHashMap.empty[String, List[(String, Long, Long)]]
 
-    def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        runs: Int, pass: String): Double = {
+    def timeOne(q: Query, runs: Int, pass: String): Double = {
+      val name = q.name
       var failed = false
       val gc0 = gcMillis()
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try q.plan(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           failed = true
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -215,7 +177,7 @@ object Bench {
           spark = recycle(spark)
           warm(qs)
         }
-        qs.map { case (name, fn) => name -> timeOne(name, fn, runs, pass) }
+        qs.map(q => q.name -> timeOne(q, runs, pass))
       }
     }
 
@@ -261,10 +223,10 @@ object Bench {
       System.err.println(s"[bench] gc-contaminated queries re-running " +
         s"clean: ${gcSuspects.mkString(", ")}")
       spark = recycle(spark)
-      val subset = picked.filter { case (n, _) => gcSuspects(n) }
+      val subset = picked.filter(q => gcSuspects(q.name))
       warm(subset)
-      val clean = subset.map { case (name, fn) =>
-        name -> timeOne(name, fn, runs = 2, pass = "gc_rerun")
+      val clean = subset.map { q =>
+        q.name -> timeOne(q, runs = 2, pass = "gc_rerun")
       }.toMap
       results = results.map { case (name, t) =>
         clean.get(name) match {
@@ -276,16 +238,9 @@ object Bench {
       }
     }
 
-    // stdout carries the CONTRACT LINE ONLY, per-query seconds rounded
-    // to 3 decimals — the driver preserves/parses a bounded stdout tail
-    // (every BENCH_r*.json back to r09 shows `parsed: null` because the
-    // old line, diag included, was tens of KB and truncated mid-line).
-    // The full-precision table plus diag/gc/calibration detail goes to
-    // the per-core-count file artifact, so multi-config driver runs
-    // (32c then 8c) can no longer clobber each other's tables.
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
+    // The per-query table plus diag/gc/calibration detail goes to the
+    // per-core-count file artifact, so runs at several core counts (32c
+    // then 8c) can no longer clobber each other's tables.
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val dg = diag.map { case (k, entries) =>
@@ -306,21 +261,22 @@ object Bench {
       s""""calibration":{"before_sec":$calibBefore,"after_sec":$calibAfter,""" +
       s""""drift":$drift,"recalibrated":$recalibrated$finalField},""" +
       s""""loadavg":{"before":"$loadBefore","after":"$loadAfter"}"""
-    val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"diag":$dg,"gc_rerun":$rr,"sf":"$sfDir","cpus":$cpus,$host}"""
     // Persist the complete table as a repo artifact keyed on the core
     // count. Diagnostic subset runs (SPARK_GRAFT_ONLY) never clobber it.
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"bench_full_c$cpus.json"), fullLine + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bench_full_c$cpus.json write failed: ${e.getMessage}")
+    val file = s"bench_full_c$cpus.json"
+    val artifact =
+      if (only.nonEmpty) None
+      else try {
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(file), fullLine + "\n")
+        Some(file)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $file write failed: ${e.getMessage}")
+        None
       }
-    // the contract line goes LAST so a bounded stdout tail captures as
-    // much of it as possible
-    println(line)
+    println(contractLine(results, sfDir, cpus, artifact))
     spark.stop()
   }
 }

@@ -1,32 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness (optimization rounds): writes `.explain("formatted")` for
   * named queries to plans/<tag>/<query>_<suffix>.txt under the repo —
   * the before/after plan evidence the optimization deliverable requires.
   *
   * Usage: sbt "runMain graft.PlanDump r14 before q_x q_y"
-  * Session mirrors Bench.newSession (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus) over $SPARK_GRAFT_SF_DIR so the captured plan is
-  * the one the bench executes.
+  * The session is Bench's (`Harness.session`) over $SPARK_GRAFT_SF_DIR,
+  * so the captured plan is the one the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query...>")
     val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Bench.cpusFromEnv(32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)

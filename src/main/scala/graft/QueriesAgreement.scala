@@ -517,33 +517,19 @@ object QueriesAgreement {
        |  LEFT JOIN txc ON nf.k = txc.k
        |  LEFT JOIN tyc ON nf.k = tyc.k""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kendall_sampled" -> (qKendallSampled _),
-    "q_weighted_ess" -> (qWeightedEss _),
-    "q_kappa" -> (qKappa _),
-    "q_mcnemar" -> (qMcnemar _),
-    "q_psi" -> (qPsi _),
-    "q_trimmed_mean" -> (qTrimmedMean _),
-    "q_robust_trend" -> (qRobustTrend _),
-    "q_fleiss_kappa" -> (qFleissKappa _),
-    "q_mantel_haenszel" -> (qMantelHaenszel _),
-    "q_cramers_v" -> (qCramersV _),
-    "q_kendall" -> (qKendall _),
-    "q_theil_sen" -> (qTheilSen _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_kendall_sampled" -> qKendallSampledSql,
-    "q_weighted_ess" -> qWeightedEssSql,
-    "q_kappa" -> qKappaSql,
-    "q_mcnemar" -> qMcnemarSql,
-    "q_psi" -> qPsiSql,
-    "q_trimmed_mean" -> qTrimmedMeanSql,
-    "q_robust_trend" -> qRobustTrendSql,
-    "q_fleiss_kappa" -> qFleissKappaSql,
-    "q_mantel_haenszel" -> qMantelHaenszelSql,
-    "q_cramers_v" -> qCramersVSql,
-    "q_kendall" -> qKendallSql,
-    "q_theil_sen" -> qTheilSenSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_kendall_sampled", qKendallSampled, qKendallSampledSql),
+    Query("q_weighted_ess", qWeightedEss, qWeightedEssSql),
+    Query("q_kappa", qKappa, qKappaSql),
+    Query("q_mcnemar", qMcnemar, qMcnemarSql),
+    Query("q_psi", qPsi, qPsiSql),
+    Query("q_trimmed_mean", qTrimmedMean, qTrimmedMeanSql),
+    Query("q_robust_trend", qRobustTrend, qRobustTrendSql),
+    Query("q_fleiss_kappa", qFleissKappa, qFleissKappaSql),
+    Query("q_mantel_haenszel", qMantelHaenszel, qMantelHaenszelSql),
+    Query("q_cramers_v", qCramersV, qCramersVSql),
+    Query("q_kendall", qKendall, qKendallSql),
+    Query("q_theil_sen", qTheilSen, qTheilSenSql),
   )
 }

@@ -376,29 +376,16 @@ object QueriesClean {
        |      FROM orders) WHERE rn > 1""".stripMargin
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_clean_geo" -> (qCleanGeo _),
-    "q_qa_geo" -> (qQaGeo _),
-    "q_clean_cpf" -> (qCleanCpf _),
-    "q_qa_cpf" -> (qQaCpf _),
-    "q_clean_uf" -> (qCleanUf _),
-    "q_clean_textcrop" -> (qCleanTextcrop _),
-    "q_patch_apply" -> (qPatchApply _),
-    "q_chain_clean" -> (qChainClean _),
-    "q_chain_qa" -> (qChainQa _),
-    "q_dedup_dropped" -> (qDedupDropped _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_clean_geo" -> qCleanGeoSql,
-    "q_qa_geo" -> qQaGeoSql,
-    "q_clean_cpf" -> qCleanCpfSql,
-    "q_qa_cpf" -> qQaCpfSql,
-    "q_clean_uf" -> qCleanUfSql,
-    "q_clean_textcrop" -> qCleanTextcropSql,
-    "q_patch_apply" -> qPatchApplySql,
-    "q_chain_clean" -> qChainCleanSql,
-    "q_chain_qa" -> qChainQaSql,
-    "q_dedup_dropped" -> qDedupDroppedSql,
+  val all: Seq[Query] = Seq(
+    Query("q_clean_geo", qCleanGeo, qCleanGeoSql),
+    Query("q_qa_geo", qQaGeo, qQaGeoSql),
+    Query("q_clean_cpf", qCleanCpf, qCleanCpfSql),
+    Query("q_qa_cpf", qQaCpf, qQaCpfSql),
+    Query("q_clean_uf", qCleanUf, qCleanUfSql),
+    Query("q_clean_textcrop", qCleanTextcrop, qCleanTextcropSql),
+    Query("q_patch_apply", qPatchApply, qPatchApplySql),
+    Query("q_chain_clean", qChainClean, qChainCleanSql),
+    Query("q_chain_qa", qChainQa, qChainQaSql),
+    Query("q_dedup_dropped", qDedupDropped, qDedupDroppedSql),
   )
 }

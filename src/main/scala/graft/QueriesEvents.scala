@@ -485,33 +485,18 @@ object QueriesEvents {
       |FROM g""".stripMargin
 
   // ------------------------------------------------------------- registry
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sessionize" -> (qSessionize _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_salted_agg" -> (qSaltedAgg _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_distinct_users" -> (qDistinctUsers _),
-    "q_session_native" -> (qSessionNative _),
-    "q_session_stats" -> (qSessionStats _),
-    "q_nearest_event" -> (qNearestEvent _),
-    "q_burstiness" -> (qBurstiness _),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_sessionize" -> qSessionizeSql,
-    "q_json_extract" -> qJsonExtractSql,
-    "q_salted_agg" -> qSaltedAggSql,
-    "q_salted_join" -> qSaltedJoinSql,
-    "q_asof_join" -> qAsofJoinSql,
-    "q_stream_dedup" -> qStreamDedupSql,
-    "q_stream_join" -> qStreamJoinSql,
-    "q_distinct_users" -> qDistinctUsersSql,
-    "q_session_native" -> qSessionNativeSql,
-    "q_session_stats" -> qSessionStatsSql,
-    "q_nearest_event" -> qNearestEventSql,
-    "q_burstiness" -> qBurstinessSql,
+  val all: Seq[Query] = Seq(
+    Query("q_sessionize", qSessionize, qSessionizeSql),
+    Query("q_json_extract", qJsonExtract, qJsonExtractSql),
+    Query("q_salted_agg", qSaltedAgg, qSaltedAggSql),
+    Query("q_salted_join", qSaltedJoin, qSaltedJoinSql),
+    Query("q_asof_join", qAsofJoin, qAsofJoinSql),
+    Query("q_stream_dedup", qStreamDedup, qStreamDedupSql),
+    Query("q_stream_join", qStreamJoin, qStreamJoinSql),
+    Query("q_distinct_users", qDistinctUsers, qDistinctUsersSql),
+    Query("q_session_native", qSessionNative, qSessionNativeSql),
+    Query("q_session_stats", qSessionStats, qSessionStatsSql),
+    Query("q_nearest_event", qNearestEvent, qNearestEventSql),
+    Query("q_burstiness", qBurstiness, qBurstinessSql),
   )
 }

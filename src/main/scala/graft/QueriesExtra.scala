@@ -945,63 +945,33 @@ object QueriesExtra {
       |FROM e GROUP BY vec_id""".stripMargin
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_csv_extract" -> (qCsvExtract _),
-    "q_jsonl_roundtrip" -> (qJsonlRoundtrip _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_fixed_width" -> (qFixedWidth _),
-    "q_token_bpe" -> (qTokenBpe _),
-    "q_embed_neardup" -> (qEmbedNeardup _),
-    "q_lsh_neardup" -> (qLshNeardup _),
-    "q_lsh_amplified" -> (qLshAmplified _),
-    "q_join_agg" -> (qJoinAgg _),
-    "q_filter_agg" -> (qFilterAgg _),
-    "q_top_revenue" -> (qTopRevenue _),
-    "q_rollup" -> (qRollup _),
-    "q_cube" -> (qCube _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_profile" -> (qProfile _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_rolling_fp" -> (qRollingFp _),
-    "q_line_dedup" -> (qLineDedup _),
-    "q_c4_lines" -> (qC4Lines _),
-    "q_curate_pipeline" -> (qCuratePipeline _),
-    "q_corpus_diff" -> (qCorpusDiff _),
-    "q_chunk_sliding" -> (qChunkSliding _),
-    "q_semdedup" -> (qSemDedup _),
-    "q_rare_tokens" -> (qRareTokens _),
-    "q_embed_quant" -> (qEmbedQuant _),
-    "q_pq_encode" -> (qPqEncode _),
-    "q_ivfpq_topk" -> (qIvfpqTopk _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_csv_extract" -> qCsvExtractSql,
-    "q_jsonl_roundtrip" -> qJsonlRoundtripSql,
-    "q_orc_roundtrip" -> qOrcRoundtripSql,
-    "q_fixed_width" -> qFixedWidthSql,
-    "q_token_bpe" -> qTokenBpeSql,
-    "q_embed_neardup" -> qEmbedNeardupSql,
-    "q_lsh_neardup" -> qLshNeardupSql,
-    "q_lsh_amplified" -> qLshAmplifiedSql,
-    "q_join_agg" -> qJoinAggSql,
-    "q_filter_agg" -> qFilterAggSql,
-    "q_top_revenue" -> qTopRevenueSql,
-    "q_rollup" -> qRollupSql,
-    "q_cube" -> qCubeSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_profile" -> qProfileSql,
-    "q_approx_distinct" -> qApproxDistinctSql,
-    "q_rolling_fp" -> qRollingFpSql,
-    "q_line_dedup" -> qLineDedupSql,
-    "q_c4_lines" -> qC4LinesSql,
-    "q_curate_pipeline" -> qCuratePipelineSql,
-    "q_corpus_diff" -> qCorpusDiffSql,
-    "q_chunk_sliding" -> qChunkSlidingSql,
-    "q_semdedup" -> qSemDedupSql,
-    "q_rare_tokens" -> qRareTokensSql,
-    "q_embed_quant" -> qEmbedQuantSql,
-    "q_pq_encode" -> qPqEncodeSql,
-    "q_ivfpq_topk" -> qIvfpqTopkSql,
+  val all: Seq[Query] = Seq(
+    Query("q_csv_extract", qCsvExtract, qCsvExtractSql),
+    Query("q_jsonl_roundtrip", qJsonlRoundtrip, qJsonlRoundtripSql),
+    Query("q_orc_roundtrip", qOrcRoundtrip, qOrcRoundtripSql),
+    Query("q_fixed_width", qFixedWidth, qFixedWidthSql),
+    Query("q_token_bpe", qTokenBpe, qTokenBpeSql),
+    Query("q_embed_neardup", qEmbedNeardup, qEmbedNeardupSql),
+    Query("q_lsh_neardup", qLshNeardup, qLshNeardupSql),
+    Query("q_lsh_amplified", qLshAmplified, qLshAmplifiedSql),
+    Query("q_join_agg", qJoinAgg, qJoinAggSql),
+    Query("q_filter_agg", qFilterAgg, qFilterAggSql),
+    Query("q_top_revenue", qTopRevenue, qTopRevenueSql),
+    Query("q_rollup", qRollup, qRollupSql),
+    Query("q_cube", qCube, qCubeSql),
+    Query("q_grouping_sets", qGroupingSets, qGroupingSetsSql),
+    Query("q_profile", qProfile, qProfileSql),
+    Query("q_approx_distinct", qApproxDistinct, qApproxDistinctSql),
+    Query("q_rolling_fp", qRollingFp, qRollingFpSql),
+    Query("q_line_dedup", qLineDedup, qLineDedupSql),
+    Query("q_c4_lines", qC4Lines, qC4LinesSql),
+    Query("q_curate_pipeline", qCuratePipeline, qCuratePipelineSql),
+    Query("q_corpus_diff", qCorpusDiff, qCorpusDiffSql),
+    Query("q_chunk_sliding", qChunkSliding, qChunkSlidingSql),
+    Query("q_semdedup", qSemDedup, qSemDedupSql),
+    Query("q_rare_tokens", qRareTokens, qRareTokensSql),
+    Query("q_embed_quant", qEmbedQuant, qEmbedQuantSql),
+    Query("q_pq_encode", qPqEncode, qPqEncodeSql),
+    Query("q_ivfpq_topk", qIvfpqTopk, qIvfpqTopkSql),
   )
 }

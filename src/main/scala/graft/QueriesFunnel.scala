@@ -832,47 +832,26 @@ object QueriesFunnel {
        |  END AS slope
        |FROM ws""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_rolling_trend" -> (qRollingTrend _),
-    "q_ccf" -> (qCcf _),
-    "q_acf" -> (qAcf _),
-    "q_ljung_box" -> (qLjungBox _),
-    "q_mann_kendall" -> (qMannKendall _),
-    "q_rbo" -> (qRbo _),
-    "q_seq_patterns" -> (qSeqPatterns _),
-    "q_funnel" -> (qFunnel _),
-    "q_transitions" -> (qTransitions _),
-    "q_anomaly" -> (qAnomaly _),
-    "q_heavy" -> (qHeavy _),
-    "q_heavy_user" -> (qHeavyUser _),
-    "q_quantile_state" -> (qQuantileState _),
-    "q_gains" -> (qGainsTable _),
-    "q_pop" -> (qPop _),
-    "q_theta_overlap" -> (qThetaOverlap _),
-    "q_forecast_eval" -> (qForecastEval _),
-    "q_seasonal_decomp" -> (qSeasonalDecomp _),
-    "q_countmin" -> (qCountMin _),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_rolling_trend" -> qRollingTrendSql,
-    "q_ccf" -> qCcfSql,
-    "q_acf" -> qAcfSql,
-    "q_ljung_box" -> qLjungBoxSql,
-    "q_mann_kendall" -> qMannKendallSql,
-    "q_rbo" -> qRboSql,
-    "q_seq_patterns" -> qSeqPatternsSql,
-    "q_funnel" -> qFunnelSql,
-    "q_transitions" -> qTransitionsSql,
-    "q_anomaly" -> qAnomalySql,
-    "q_heavy" -> qHeavySql,
-    "q_heavy_user" -> qHeavyUserSql,
-    "q_quantile_state" -> qQuantileStateSql,
-    "q_gains" -> qGainsTableSql,
-    "q_pop" -> qPopSql,
-    "q_theta_overlap" -> qThetaOverlapSql,
-    "q_forecast_eval" -> qForecastEvalSql,
-    "q_seasonal_decomp" -> qSeasonalDecompSql,
-    "q_countmin" -> qCountMinSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_rolling_trend", qRollingTrend, qRollingTrendSql),
+    Query("q_ccf", qCcf, qCcfSql),
+    Query("q_acf", qAcf, qAcfSql),
+    Query("q_ljung_box", qLjungBox, qLjungBoxSql),
+    Query("q_mann_kendall", qMannKendall, qMannKendallSql),
+    Query("q_rbo", qRbo, qRboSql),
+    Query("q_seq_patterns", qSeqPatterns, qSeqPatternsSql),
+    Query("q_funnel", qFunnel, qFunnelSql),
+    Query("q_transitions", qTransitions, qTransitionsSql),
+    Query("q_anomaly", qAnomaly, qAnomalySql),
+    Query("q_heavy", qHeavy, qHeavySql),
+    Query("q_heavy_user", qHeavyUser, qHeavyUserSql),
+    Query("q_quantile_state", qQuantileState, qQuantileStateSql),
+    Query("q_gains", qGainsTable, qGainsTableSql),
+    Query("q_pop", qPop, qPopSql),
+    Query("q_theta_overlap", qThetaOverlap, qThetaOverlapSql),
+    Query("q_forecast_eval", qForecastEval, qForecastEvalSql),
+    Query("q_seasonal_decomp", qSeasonalDecomp, qSeasonalDecompSql),
+    Query("q_countmin", qCountMin, qCountMinSql),
   )
 }

@@ -174,15 +174,10 @@ object QueriesGraph {
        |FROM h$HitsIters h JOIN a$HitsIters a USING (node)""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_modularity" -> (qModularity _),
-    "q_link_predict" -> (qLinkPredict _),
-    "q_hits" -> (qHits _),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_modularity" -> qModularitySql,
-    "q_link_predict" -> qLinkPredictSql,
-    "q_hits" -> qHitsSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_modularity", qModularity, qModularitySql),
+    Query("q_link_predict", qLinkPredict, qLinkPredictSql),
+    Query("q_hits", qHits, qHitsSql),
   )
 }

@@ -364,23 +364,15 @@ object QueriesInference {
        |FROM agg""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_anova" -> (qAnova _),
-    "q_ad2" -> (qAd2 _),
-    "q_kruskal" -> (qKruskal _),
-    "q_brown_forsythe" -> (qBrownForsythe _),
-    "q_cochran_q" -> (qCochranQ _),
-    "q_cochran_armitage" -> (qCochranArmitage _),
-    "q_cronbach" -> (qCronbach _),
-    "q_icc" -> (qIcc _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_anova" -> qAnovaSql,
-    "q_ad2" -> qAd2Sql,
-    "q_kruskal" -> qKruskalSql,
-    "q_brown_forsythe" -> qBrownForsytheSql,
-    "q_cochran_q" -> qCochranQSql,
-    "q_cochran_armitage" -> qCochranArmitageSql,
-    "q_cronbach" -> qCronbachSql,
-    "q_icc" -> qIccSql)
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_anova", qAnova, qAnovaSql),
+    Query("q_ad2", qAd2, qAd2Sql),
+    Query("q_kruskal", qKruskal, qKruskalSql),
+    Query("q_brown_forsythe", qBrownForsythe, qBrownForsytheSql),
+    Query("q_cochran_q", qCochranQ, qCochranQSql),
+    Query("q_cochran_armitage", qCochranArmitage, qCochranArmitageSql),
+    Query("q_cronbach", qCronbach, qCronbachSql),
+    Query("q_icc", qIcc, qIccSql),
+  )
 }

@@ -1242,54 +1242,29 @@ object QueriesInfo {
        |FROM sh""".stripMargin
   }
 
-  // ---------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_linkage" -> (qLinkage _),
-    "q_er_pipeline" -> (qErPipeline _),
-    "q_curriculum" -> (qCurriculum _),
-    "q_betweenness" -> (qBetweenness _),
-    "q_sprt" -> (qSprt _),
-    "q_anova2" -> (qAnova2 _),
-    "q_grubbs" -> (qGrubbs _),
-    "q_bartlett" -> (qBartlett _),
-    "q_durbin_watson" -> (qDurbinWatson _),
-    "q_periodogram" -> (qPeriodogram _),
-    "q_closeness" -> (qCloseness _),
-    "q_poisson_irls" -> (qPoissonIrls _),
-    "q_good_turing" -> (qGoodTuring _),
-    "q_jarque_bera" -> (qJarqueBera _),
-    "q_cohens_d" -> (qCohensD _),
-    "q_cliffs_delta" -> (qCliffsDelta _),
-    "q_perm_test" -> (qPermTest _),
-    "q_mutual_info" -> (qMutualInfo _),
-    "q_diversity" -> (qDiversity _),
-    "q_zipf" -> (qZipf _),
-    "q_kneser_ney" -> (qKneserNey _),
-    "q_dbscan" -> (qDbscan _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_linkage" -> qLinkageSql,
-    "q_er_pipeline" -> qErPipelineSql,
-    "q_curriculum" -> qCurriculumSql,
-    "q_betweenness" -> qBetweennessSql,
-    "q_sprt" -> qSprtSql,
-    "q_anova2" -> qAnova2Sql,
-    "q_grubbs" -> qGrubbsSql,
-    "q_bartlett" -> qBartlettSql,
-    "q_durbin_watson" -> qDurbinWatsonSql,
-    "q_periodogram" -> qPeriodogramSql,
-    "q_closeness" -> qClosenessSql,
-    "q_poisson_irls" -> qPoissonIrlsSql,
-    "q_good_turing" -> qGoodTuringSql,
-    "q_jarque_bera" -> qJarqueBeraSql,
-    "q_cohens_d" -> qCohensDSql,
-    "q_cliffs_delta" -> qCliffsDeltaSql,
-    "q_perm_test" -> qPermTestSql,
-    "q_mutual_info" -> qMutualInfoSql,
-    "q_diversity" -> qDiversitySql,
-    "q_zipf" -> qZipfSql,
-    "q_kneser_ney" -> qKneserNeySql,
-    "q_dbscan" -> qDbscanSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_linkage", qLinkage, qLinkageSql),
+    Query("q_er_pipeline", qErPipeline, qErPipelineSql),
+    Query("q_curriculum", qCurriculum, qCurriculumSql),
+    Query("q_betweenness", qBetweenness, qBetweennessSql),
+    Query("q_sprt", qSprt, qSprtSql),
+    Query("q_anova2", qAnova2, qAnova2Sql),
+    Query("q_grubbs", qGrubbs, qGrubbsSql),
+    Query("q_bartlett", qBartlett, qBartlettSql),
+    Query("q_durbin_watson", qDurbinWatson, qDurbinWatsonSql),
+    Query("q_periodogram", qPeriodogram, qPeriodogramSql),
+    Query("q_closeness", qCloseness, qClosenessSql),
+    Query("q_poisson_irls", qPoissonIrls, qPoissonIrlsSql),
+    Query("q_good_turing", qGoodTuring, qGoodTuringSql),
+    Query("q_jarque_bera", qJarqueBera, qJarqueBeraSql),
+    Query("q_cohens_d", qCohensD, qCohensDSql),
+    Query("q_cliffs_delta", qCliffsDelta, qCliffsDeltaSql),
+    Query("q_perm_test", qPermTest, qPermTestSql),
+    Query("q_mutual_info", qMutualInfo, qMutualInfoSql),
+    Query("q_diversity", qDiversity, qDiversitySql),
+    Query("q_zipf", qZipf, qZipfSql),
+    Query("q_kneser_ney", qKneserNey, qKneserNeySql),
+    Query("q_dbscan", qDbscan, qDbscanSql),
   )
 }

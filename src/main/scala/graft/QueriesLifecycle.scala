@@ -898,45 +898,24 @@ object QueriesLifecycle {
       |FROM wm GROUP BY 1""".stripMargin
 
   // ------------------------------------------------------------- registry
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kaplan_meier" -> (qKaplanMeier _),
-    "q_km_state" -> (qKmState _),
-    "q_cox" -> (qCox _),
-    "q_cum_incidence" -> (qCumIncidence _),
-    "q_rmst" -> (qRmst _),
-    "q_cum_hazard" -> (qCumHazard _),
-    "q_streaks" -> (qStreaks _),
-    "q_scd2_history" -> (qScd2History _),
-    "q_scd2_apply" -> (qScd2Apply _),
-    "q_retention" -> (qRetention _),
-    "q_decay" -> (qDecay _),
-    "q_time_to_convert" -> (qTimeToConvert _),
-    "q_km_risk" -> (qKmRisk _),
-    "q_logrank" -> (qLogRank _),
-    "q_next_event" -> (qNextEvent _),
-    "q_cohort_ltv" -> (qCohortLtv _),
-    "q_churn_label" -> (qChurnLabel _),
-    "q_rfm" -> (qRfm _),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_kaplan_meier" -> qKaplanMeierSql,
-    "q_km_state" -> qKaplanMeierSql,
-    "q_cox" -> qCoxSql,
-    "q_cum_incidence" -> qCumIncidenceSql,
-    "q_rmst" -> qRmstSql,
-    "q_cum_hazard" -> qCumHazardSql,
-    "q_streaks" -> qStreaksSql,
-    "q_scd2_history" -> qScd2HistorySql,
-    "q_scd2_apply" -> qScd2ApplySql,
-    "q_retention" -> qRetentionSql,
-    "q_decay" -> qDecaySql,
-    "q_time_to_convert" -> qTimeToConvertSql,
-    "q_km_risk" -> qKmRiskSql,
-    "q_logrank" -> qLogRankSql,
-    "q_next_event" -> qNextEventSql,
-    "q_cohort_ltv" -> qCohortLtvSql,
-    "q_churn_label" -> qChurnLabelSql,
-    "q_rfm" -> qRfmSql,
+  val all: Seq[Query] = Seq(
+    Query("q_kaplan_meier", qKaplanMeier, qKaplanMeierSql),
+    Query("q_km_state", qKmState, qKaplanMeierSql),
+    Query("q_cox", qCox, qCoxSql),
+    Query("q_cum_incidence", qCumIncidence, qCumIncidenceSql),
+    Query("q_rmst", qRmst, qRmstSql),
+    Query("q_cum_hazard", qCumHazard, qCumHazardSql),
+    Query("q_streaks", qStreaks, qStreaksSql),
+    Query("q_scd2_history", qScd2History, qScd2HistorySql),
+    Query("q_scd2_apply", qScd2Apply, qScd2ApplySql),
+    Query("q_retention", qRetention, qRetentionSql),
+    Query("q_decay", qDecay, qDecaySql),
+    Query("q_time_to_convert", qTimeToConvert, qTimeToConvertSql),
+    Query("q_km_risk", qKmRisk, qKmRiskSql),
+    Query("q_logrank", qLogRank, qLogRankSql),
+    Query("q_next_event", qNextEvent, qNextEventSql),
+    Query("q_cohort_ltv", qCohortLtv, qCohortLtvSql),
+    Query("q_churn_label", qChurnLabel, qChurnLabelSql),
+    Query("q_rfm", qRfm, qRfmSql),
   )
 }

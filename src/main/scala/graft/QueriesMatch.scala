@@ -640,43 +640,23 @@ object QueriesMatch {
       |  ON l.user_id = r.user_id AND l.ts <= r.ts""".stripMargin
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fuzzy_pairs" -> (qFuzzyPairs _),
-    "q_fuzzy_del" -> (qFuzzyDel _),
-    "q_fuzzy_match" -> (qFuzzyMatch _),
-    "q_incr_agg" -> (qIncrAgg _),
-    "q_scd2_join" -> (qScd2Join _),
-    "q_jaro_rescore" -> (qJaroRescore _),
-    "q_entity_groups" -> (qEntityGroups _),
-    "q_resample" -> (qResample _),
-    "q_rolling_1h" -> (qRolling1h _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_interval_merge" -> (qIntervalMerge _),
-    "q_interval_subtract" -> (qIntervalSubtract _),
-    "q_blocking_quality" -> (qBlockingQuality _),
-    "q_asof_fwd" -> (qAsofFwd _),
-    "q_concurrency" -> (qConcurrency _),
-    "q_reconcile" -> (qReconcile _),
-    "q_changelog" -> (qChangelog _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_fuzzy_pairs" -> qFuzzyPairsSql,
-    "q_fuzzy_del" -> qFuzzyPairsSql,
-    "q_fuzzy_match" -> qFuzzyMatchSql,
-    "q_incr_agg" -> qIncrAggSql,
-    "q_scd2_join" -> qScd2JoinSql,
-    "q_jaro_rescore" -> qJaroRescoreSql,
-    "q_entity_groups" -> qEntityGroupsSql,
-    "q_resample" -> qResampleSql,
-    "q_rolling_1h" -> qRolling1hSql,
-    "q_unpivot" -> qUnpivotSql,
-    "q_interval_merge" -> qIntervalMergeSql,
-    "q_interval_subtract" -> qIntervalSubtractSql,
-    "q_blocking_quality" -> qBlockingQualitySql,
-    "q_asof_fwd" -> qAsofFwdSql,
-    "q_concurrency" -> qConcurrencySql,
-    "q_reconcile" -> qReconcileSql,
-    "q_changelog" -> qChangelogSql,
+  val all: Seq[Query] = Seq(
+    Query("q_fuzzy_pairs", qFuzzyPairs, qFuzzyPairsSql),
+    Query("q_fuzzy_del", qFuzzyDel, qFuzzyPairsSql),
+    Query("q_fuzzy_match", qFuzzyMatch, qFuzzyMatchSql),
+    Query("q_incr_agg", qIncrAgg, qIncrAggSql),
+    Query("q_scd2_join", qScd2Join, qScd2JoinSql),
+    Query("q_jaro_rescore", qJaroRescore, qJaroRescoreSql),
+    Query("q_entity_groups", qEntityGroups, qEntityGroupsSql),
+    Query("q_resample", qResample, qResampleSql),
+    Query("q_rolling_1h", qRolling1h, qRolling1hSql),
+    Query("q_unpivot", qUnpivot, qUnpivotSql),
+    Query("q_interval_merge", qIntervalMerge, qIntervalMergeSql),
+    Query("q_interval_subtract", qIntervalSubtract, qIntervalSubtractSql),
+    Query("q_blocking_quality", qBlockingQuality, qBlockingQualitySql),
+    Query("q_asof_fwd", qAsofFwd, qAsofFwdSql),
+    Query("q_concurrency", qConcurrency, qConcurrencySql),
+    Query("q_reconcile", qReconcile, qReconcileSql),
+    Query("q_changelog", qChangelog, qChangelogSql),
   )
 }

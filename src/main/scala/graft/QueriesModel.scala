@@ -1065,41 +1065,23 @@ object QueriesModel {
        |FROM best""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_logit_irls" -> (qLogitIrls _),
-    "q_psm" -> (qPsm _),
-    "q_huber_irls" -> (qHuberIrls _),
-    "q_chow" -> (qChow _),
-    "q_bradley_terry" -> (qBradleyTerry _),
-    "q_ndcg" -> (qNdcg _),
-    "q_avg_precision" -> (qAvgPrecision _),
-    "q_ridge_fit" -> (qRidgeFit _),
-    "q_ridge_state" -> (qRidgeState _),
-    "q_cv_ridge" -> (qCvRidge _),
-    "q_conformal" -> (qConformal _),
-    "q_label_prop" -> (qLabelProp _),
-    "q_auc" -> (qAuc _),
-    "q_calibration" -> (qCalibration _),
-    "q_isotonic" -> (qIsotonic _),
-    "q_confusion" -> (qConfusion _),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_logit_irls" -> qLogitIrlsSql,
-    "q_psm" -> qPsmSql,
-    "q_huber_irls" -> qHuberIrlsSql,
-    "q_chow" -> qChowSql,
-    "q_bradley_terry" -> qBradleyTerrySql,
-    "q_ndcg" -> qNdcgSql,
-    "q_avg_precision" -> qAvgPrecisionSql,
-    "q_ridge_fit" -> qRidgeFitSql,
-    "q_ridge_state" -> qRidgeFitSql,
-    "q_cv_ridge" -> qCvRidgeSql,
-    "q_conformal" -> qConformalSql,
-    "q_label_prop" -> qLabelPropSql,
-    "q_auc" -> qAucSql,
-    "q_calibration" -> qCalibrationSql,
-    "q_isotonic" -> qIsotonicSql,
-    "q_confusion" -> qConfusionSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_logit_irls", qLogitIrls, qLogitIrlsSql),
+    Query("q_psm", qPsm, qPsmSql),
+    Query("q_huber_irls", qHuberIrls, qHuberIrlsSql),
+    Query("q_chow", qChow, qChowSql),
+    Query("q_bradley_terry", qBradleyTerry, qBradleyTerrySql),
+    Query("q_ndcg", qNdcg, qNdcgSql),
+    Query("q_avg_precision", qAvgPrecision, qAvgPrecisionSql),
+    Query("q_ridge_fit", qRidgeFit, qRidgeFitSql),
+    Query("q_ridge_state", qRidgeState, qRidgeFitSql),
+    Query("q_cv_ridge", qCvRidge, qCvRidgeSql),
+    Query("q_conformal", qConformal, qConformalSql),
+    Query("q_label_prop", qLabelProp, qLabelPropSql),
+    Query("q_auc", qAuc, qAucSql),
+    Query("q_calibration", qCalibration, qCalibrationSql),
+    Query("q_isotonic", qIsotonic, qIsotonicSql),
+    Query("q_confusion", qConfusion, qConfusionSql),
   )
 }

@@ -128,11 +128,9 @@ object QueriesNb {
        |      FROM gscored) WHERE rn = 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_naive_bayes" -> (qNaiveBayes _),
-    "q_gate_pipeline" -> (qGatePipeline _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_naive_bayes" -> qNaiveBayesSql,
-    "q_gate_pipeline" -> qGatePipelineSql)
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_naive_bayes", qNaiveBayes, qNaiveBayesSql),
+    Query("q_gate_pipeline", qGatePipeline, qGatePipelineSql),
+  )
 }

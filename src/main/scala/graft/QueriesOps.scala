@@ -426,37 +426,20 @@ object QueriesOps {
       |  t(r_regionkey, r_name)""".stripMargin
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_audit" -> (qAudit _),
-    "q_distance" -> (qDistance _),
-    "q_events_window" -> (qEventsWindow _),
-    "q_frames" -> (qFrames _),
-    "q_frame_stats" -> (qFrameStats _),
-    "q_thumb_stats" -> (qThumbStats _),
-    "q_crop_stats" -> (qCropStats _),
-    "q_audio_stats" -> (qAudioStats _),
-    "q_frame_hamming" -> (qFrameHamming _),
-    "q_date_funcs" -> (qDateFuncs _),
-    "q_topk" -> (qTopk _),
-    "q_topk_group" -> (qTopkGroup _),
-    "q_window_running" -> (qWindowRunning _),
-    "q_values_union" -> (qValuesUnion _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_audit" -> qAuditSql,
-    "q_distance" -> qDistanceSql,
-    "q_events_window" -> qEventsWindowSql,
-    "q_frames" -> qFramesSql,
-    "q_frame_stats" -> qFrameStatsSql,
-    "q_thumb_stats" -> qThumbStatsSql,
-    "q_crop_stats" -> qCropStatsSql,
-    "q_audio_stats" -> qAudioStatsSql,
-    "q_frame_hamming" -> qFrameHammingSql,
-    "q_date_funcs" -> qDateFuncsSql,
-    "q_topk" -> qTopkSql,
-    "q_topk_group" -> qTopkGroupSql,
-    "q_window_running" -> qWindowRunningSql,
-    "q_values_union" -> qValuesUnionSql,
+  val all: Seq[Query] = Seq(
+    Query("q_audit", qAudit, qAuditSql),
+    Query("q_distance", qDistance, qDistanceSql),
+    Query("q_events_window", qEventsWindow, qEventsWindowSql),
+    Query("q_frames", qFrames, qFramesSql),
+    Query("q_frame_stats", qFrameStats, qFrameStatsSql),
+    Query("q_thumb_stats", qThumbStats, qThumbStatsSql),
+    Query("q_crop_stats", qCropStats, qCropStatsSql),
+    Query("q_audio_stats", qAudioStats, qAudioStatsSql),
+    Query("q_frame_hamming", qFrameHamming, qFrameHammingSql),
+    Query("q_date_funcs", qDateFuncs, qDateFuncsSql),
+    Query("q_topk", qTopk, qTopkSql),
+    Query("q_topk_group", qTopkGroup, qTopkGroupSql),
+    Query("q_window_running", qWindowRunning, qWindowRunningSql),
+    Query("q_values_union", qValuesUnion, qValuesUnionSql),
   )
 }

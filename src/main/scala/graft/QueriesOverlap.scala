@@ -102,13 +102,9 @@ object QueriesOverlap {
        |   OR CAST(n_shared AS DOUBLE) / CAST(sb.sig_size AS DOUBLE)
        |        >= $Threshold""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_winnow_sig" -> (qWinnowSig _),
-    "q_containment" -> (qContainment _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_winnow_sig" -> qWinnowSigSql,
-    "q_containment" -> qContainmentSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_winnow_sig", qWinnowSig, qWinnowSigSql),
+    Query("q_containment", qContainment, qContainmentSql),
   )
 }

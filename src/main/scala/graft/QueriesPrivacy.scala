@@ -242,25 +242,15 @@ object QueriesPrivacy {
        |FROM src s LEFT JOIN rare r
        |  ON s.c_mktsegment = r.c_mktsegment AND s.nation = r.nation""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pseudonymize" -> (qPseudonymize _),
-    "q_suppress_rare" -> (qSuppressRare _),
-    "q_k_anonymity" -> (qKAnonymity _),
-    "q_privacy_risk" -> (qPrivacyRisk _),
-    "q_l_diversity" -> (qLDiversity _),
-    "q_t_closeness" -> (qTCloseness _),
-    "q_dp_counts" -> (qDpCounts _),
-    "q_dp_sum" -> (qDpSum _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_pseudonymize" -> qPseudonymizeSql,
-    "q_suppress_rare" -> qSuppressRareSql,
-    "q_k_anonymity" -> qKAnonymitySql,
-    "q_privacy_risk" -> qPrivacyRiskSql,
-    "q_l_diversity" -> qLDiversitySql,
-    "q_t_closeness" -> qTClosenessSql,
-    "q_dp_counts" -> qDpCountsSql,
-    "q_dp_sum" -> qDpSumSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_pseudonymize", qPseudonymize, qPseudonymizeSql),
+    Query("q_suppress_rare", qSuppressRare, qSuppressRareSql),
+    Query("q_k_anonymity", qKAnonymity, qKAnonymitySql),
+    Query("q_privacy_risk", qPrivacyRisk, qPrivacyRiskSql),
+    Query("q_l_diversity", qLDiversity, qLDiversitySql),
+    Query("q_t_closeness", qTCloseness, qTClosenessSql),
+    Query("q_dp_counts", qDpCounts, qDpCountsSql),
+    Query("q_dp_sum", qDpSum, qDpSumSql),
   )
 }

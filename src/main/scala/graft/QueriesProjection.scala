@@ -268,21 +268,13 @@ object QueriesProjection {
        |    ORDER BY cos_sim DESC, nn_id) AS rn
        |  FROM scored WHERE cos_sim < $HardNegThreshold) WHERE rn = 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hamming_topk" -> (qHammingTopk _),
-    "q_hard_negatives" -> (qHardNegatives _),
-    "q_embed_norm" -> (qEmbedNorm _),
-    "q_embed_pool" -> (qEmbedPool _),
-    "q_rand_proj" -> (qRandProj _),
-    "q_proj_topk" -> (qProjTopk _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_rand_proj" -> qRandProjSql,
-    "q_proj_topk" -> qProjTopkSql,
-    "q_hamming_topk" -> qHammingTopkSql,
-    "q_embed_norm" -> qEmbedNormSql,
-    "q_embed_pool" -> qEmbedPoolSql,
-    "q_hard_negatives" -> qHardNegativesSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_hamming_topk", qHammingTopk, qHammingTopkSql),
+    Query("q_hard_negatives", qHardNegatives, qHardNegativesSql),
+    Query("q_embed_norm", qEmbedNorm, qEmbedNormSql),
+    Query("q_embed_pool", qEmbedPool, qEmbedPoolSql),
+    Query("q_rand_proj", qRandProj, qRandProjSql),
+    Query("q_proj_topk", qProjTopk, qProjTopkSql),
   )
 }

@@ -1216,79 +1216,41 @@ object QueriesQuality {
       .stripMargin
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_quantile_norm" -> (qQuantileNorm _),
-    "q_session_capped" -> (qSessionCapped _),
-    "q_debounce" -> (qDebounce _),
-    "q_ewma" -> (qEwma _),
-    "q_rank_metric" -> (qRankMetric _),
-    "q_lag_features" -> (qLagFeatures _),
-    "q_target_encode" -> (qTargetEncode _),
-    "q_time_split" -> (qTimeSplit _),
-    "q_hierarchy" -> (qHierarchy _),
-    "q_hopping" -> (qHopping _),
-    "q_golden" -> (qGolden _),
-    "q_accent_fold" -> (qAccentFold _),
-    "q_qq" -> (qQq _),
-    "q_budget_sample" -> (qBudgetSample _),
-    "q_cluster_terms" -> (qClusterTerms _),
-    "q_quantile_cont" -> (qQuantileCont _),
-    "q_twa" -> (qTwa _),
-    "q_label_encode" -> (qLabelEncode _),
-    "q_table_sig" -> (qTableSig _),
-    "q_sketch_users" -> (qSketchUsers _),
-    "q_attribution" -> (qAttribution _),
-    "q_cusum" -> (qCusum _),
-    "q_page_hinkley" -> (qPageHinkley _),
-    "q_drift_pipeline" -> (qDriftPipeline _),
-    "q_decompose" -> (qDecompose _),
-    "q_quarantine" -> (qQuarantine _),
-    "q_wmedian" -> (qWmedian _),
-    "q_assoc" -> (qAssoc _),
-    "q_bins" -> (qBins _),
-    "q_expectations" -> (qExpectations _),
-    "q_interpolate" -> (qInterpolate _),
-    "q_mad" -> (qMad _),
-    "q_neg_sample" -> (qNegSample _),
-    "q_pareto" -> (qPareto _),
-    "q_benford" -> (qBenford _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_quantile_norm" -> qQuantileNormSql,
-    "q_session_capped" -> qSessionCappedSql,
-    "q_debounce" -> qDebounceSql,
-    "q_ewma" -> qEwmaSql,
-    "q_rank_metric" -> qRankMetricSql,
-    "q_lag_features" -> qLagFeaturesSql,
-    "q_target_encode" -> qTargetEncodeSql,
-    "q_time_split" -> qTimeSplitSql,
-    "q_hierarchy" -> qHierarchySql,
-    "q_hopping" -> qHoppingSql,
-    "q_golden" -> qGoldenSql,
-    "q_accent_fold" -> qAccentFoldSql,
-    "q_qq" -> qQqSql,
-    "q_budget_sample" -> qBudgetSampleSql,
-    "q_cluster_terms" -> qClusterTermsSql,
-    "q_quantile_cont" -> qQuantileContSql,
-    "q_twa" -> qTwaSql,
-    "q_label_encode" -> qLabelEncodeSql,
-    "q_table_sig" -> qTableSigSql,
-    "q_sketch_users" -> qSketchUsersSql,
-    "q_attribution" -> qAttributionSql,
-    "q_cusum" -> qCusumSql,
-    "q_page_hinkley" -> qPageHinkleySql,
-    "q_drift_pipeline" -> qDriftPipelineSql,
-    "q_decompose" -> qDecomposeSql,
-    "q_quarantine" -> qQuarantineSql,
-    "q_wmedian" -> qWmedianSql,
-    "q_assoc" -> qAssocSql,
-    "q_bins" -> qBinsSql,
-    "q_expectations" -> qExpectationsSql,
-    "q_interpolate" -> qInterpolateSql,
-    "q_mad" -> qMadSql,
-    "q_neg_sample" -> qNegSampleSql,
-    "q_pareto" -> qParetoSql,
-    "q_benford" -> qBenfordSql,
+  val all: Seq[Query] = Seq(
+    Query("q_quantile_norm", qQuantileNorm, qQuantileNormSql),
+    Query("q_session_capped", qSessionCapped, qSessionCappedSql),
+    Query("q_debounce", qDebounce, qDebounceSql),
+    Query("q_ewma", qEwma, qEwmaSql),
+    Query("q_rank_metric", qRankMetric, qRankMetricSql),
+    Query("q_lag_features", qLagFeatures, qLagFeaturesSql),
+    Query("q_target_encode", qTargetEncode, qTargetEncodeSql),
+    Query("q_time_split", qTimeSplit, qTimeSplitSql),
+    Query("q_hierarchy", qHierarchy, qHierarchySql),
+    Query("q_hopping", qHopping, qHoppingSql),
+    Query("q_golden", qGolden, qGoldenSql),
+    Query("q_accent_fold", qAccentFold, qAccentFoldSql),
+    Query("q_qq", qQq, qQqSql),
+    Query("q_budget_sample", qBudgetSample, qBudgetSampleSql),
+    Query("q_cluster_terms", qClusterTerms, qClusterTermsSql),
+    Query("q_quantile_cont", qQuantileCont, qQuantileContSql),
+    Query("q_twa", qTwa, qTwaSql),
+    Query("q_label_encode", qLabelEncode, qLabelEncodeSql),
+    Query("q_table_sig", qTableSig, qTableSigSql),
+    Query("q_sketch_users", qSketchUsers, qSketchUsersSql),
+    Query("q_attribution", qAttribution, qAttributionSql),
+    Query("q_cusum", qCusum, qCusumSql),
+    Query("q_page_hinkley", qPageHinkley, qPageHinkleySql),
+    Query("q_drift_pipeline", qDriftPipeline, qDriftPipelineSql),
+    Query("q_decompose", qDecompose, qDecomposeSql),
+    Query("q_quarantine", qQuarantine, qQuarantineSql),
+    Query("q_wmedian", qWmedian, qWmedianSql),
+    Query("q_assoc", qAssoc, qAssocSql),
+    Query("q_bins", qBins, qBinsSql),
+    Query("q_expectations", qExpectations, qExpectationsSql),
+    Query("q_interpolate", qInterpolate, qInterpolateSql),
+    Query("q_mad", qMad, qMadSql),
+    Query("q_neg_sample", qNegSample, qNegSampleSql),
+    Query("q_pareto", qPareto, qParetoSql),
+    Query("q_benford", qBenford, qBenfordSql),
   )
 }

@@ -243,17 +243,12 @@ object QueriesRank {
        |      FROM scored) WHERE rn = 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hellinger" -> (qHellinger _),
-    "q_stump" -> (qStump _),
-    "q_textrank" -> (qTextrank _),
-    "q_nearest_centroid" -> (qNearestCentroid _),
-    "q_friedman" -> (qFriedman _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_hellinger" -> qHellingerSql,
-    "q_stump" -> qStumpSql,
-    "q_textrank" -> qTextrankSql,
-    "q_nearest_centroid" -> qNearestCentroidSql,
-    "q_friedman" -> qFriedmanSql)
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_hellinger", qHellinger, qHellingerSql),
+    Query("q_stump", qStump, qStumpSql),
+    Query("q_textrank", qTextrank, qTextrankSql),
+    Query("q_nearest_centroid", qNearestCentroid, qNearestCentroidSql),
+    Query("q_friedman", qFriedman, qFriedmanSql),
+  )
 }

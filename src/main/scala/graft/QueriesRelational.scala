@@ -191,23 +191,14 @@ object QueriesRelational {
          |FROM (SELECT count(*) AS n FROM orders GROUP BY $grp) g""".stripMargin
     }.mkString("\nUNION ALL\n")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fd_check" -> (qFdCheck _),
-    "q_key_check" -> (qKeyCheck _),
-    "q_exists_semi" -> (qExistsSemi _),
-    "q_anti_agg" -> (qAntiAgg _),
-    "q_scalar_corr" -> (qScalarCorr _),
-    "q_having_semi" -> (qHavingSemi _),
-    "q_setops" -> (qSetOps _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_exists_semi" -> existsSemiSql,
-    "q_anti_agg" -> antiAggSql,
-    "q_fd_check" -> qFdCheckSql,
-    "q_key_check" -> qKeyCheckSql,
-    "q_scalar_corr" -> scalarCorrSql,
-    "q_having_semi" -> havingSemiSql,
-    "q_setops" -> setOpsSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_fd_check", qFdCheck, qFdCheckSql),
+    Query("q_key_check", qKeyCheck, qKeyCheckSql),
+    Query("q_exists_semi", qExistsSemi, existsSemiSql),
+    Query("q_anti_agg", qAntiAgg, antiAggSql),
+    Query("q_scalar_corr", qScalarCorr, scalarCorrSql),
+    Query("q_having_semi", qHavingSemi, havingSemiSql),
+    Query("q_setops", qSetOps, setOpsSql),
   )
 }

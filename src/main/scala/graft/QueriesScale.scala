@@ -1092,73 +1092,39 @@ object QueriesScale {
       |WHERE o_orderkey % 11 <> 0 AND o_orderkey % 7 = 0""".stripMargin
 
   // ------------------------------------------------------------------ maps
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_zorder" -> (qZorder _),
-    "q_temperature_mix" -> (qTemperatureMix _),
-    "q_zorder3" -> (qZorder3 _),
-    "q_bloom_lookup" -> (qBloomLookup _),
-    "q_zonemap_lookup" -> (qZonemapLookup _),
-    "q_join_estimate" -> (qJoinEstimate _),
-    "q_span_excise" -> (qSpanExcise _),
-    "q_repeated_spans" -> (qRepeatedSpans _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_bloom_semi" -> (qBloomSemi _),
-    "q_centroids" -> (qCentroids _),
-    "q_repetition" -> (qRepetition _),
-    "q_pivot_lang" -> (qPivotLang _),
-    "q_overlap_join" -> (qOverlapJoin _),
-    "q_quantiles" -> (qQuantiles _),
-    "q_boilerplate" -> (qBoilerplate _),
-    "q_contamination" -> (qContamination _),
-    "q_packing" -> (qPacking _),
-    "q_mixture" -> (qMixture _),
-    "q_pagerank" -> (qPageRank _),
-    "q_ppr" -> (qPpr _),
-    "q_bfs" -> (qBfs _),
-    "q_triangles" -> (qTriangles _),
-    "q_assortativity" -> (qAssortativity _),
-    "q_kcore" -> (qKcore _),
-    "q_skew_report" -> (qSkewReport _),
-    "q_bucket_join" -> (qBucketJoin _),
-    "q_epoch_shuffle" -> (qEpochShuffle _),
-    "q_partition_prune" -> (qPartitionPrune _),
-    "q_mor_delete" -> (qMorDelete _),
-    "q_mor_upsert" -> (qMorUpsert _),
-    "q_version_diff" -> (qVersionDiff _),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_zorder" -> qZorderSql,
-    "q_temperature_mix" -> qTemperatureMixSql,
-    "q_zorder3" -> qZorder3Sql,
-    "q_bloom_lookup" -> qBloomLookupSql,
-    "q_zonemap_lookup" -> qZonemapLookupSql,
-    "q_join_estimate" -> qJoinEstimateSql,
-    "q_span_excise" -> qSpanExciseSql,
-    "q_repeated_spans" -> qRepeatedSpansSql,
-    "q_range_join" -> qRangeJoinSql,
-    "q_bloom_semi" -> qBloomSemiSql,
-    "q_centroids" -> qCentroidsSql,
-    "q_repetition" -> qRepetitionSql,
-    "q_pivot_lang" -> qPivotLangSql,
-    "q_overlap_join" -> qOverlapJoinSql,
-    "q_quantiles" -> qQuantilesSql,
-    "q_boilerplate" -> qBoilerplateSql,
-    "q_contamination" -> qContaminationSql,
-    "q_packing" -> qPackingSql,
-    "q_mixture" -> qMixtureSql,
-    "q_pagerank" -> qPageRankSql,
-    "q_ppr" -> qPprSql,
-    "q_bfs" -> qBfsSql,
-    "q_triangles" -> qTrianglesSql,
-    "q_assortativity" -> qAssortativitySql,
-    "q_kcore" -> qKcoreSql,
-    "q_skew_report" -> qSkewReportSql,
-    "q_bucket_join" -> qBucketJoinSql,
-    "q_epoch_shuffle" -> qEpochShuffleSql,
-    "q_partition_prune" -> qPartitionPruneSql,
-    "q_mor_delete" -> qMorDeleteSql,
-    "q_mor_upsert" -> qMorUpsertSql,
-    "q_version_diff" -> qVersionDiffSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_zorder", qZorder, qZorderSql),
+    Query("q_temperature_mix", qTemperatureMix, qTemperatureMixSql),
+    Query("q_zorder3", qZorder3, qZorder3Sql),
+    Query("q_bloom_lookup", qBloomLookup, qBloomLookupSql),
+    Query("q_zonemap_lookup", qZonemapLookup, qZonemapLookupSql),
+    Query("q_join_estimate", qJoinEstimate, qJoinEstimateSql),
+    Query("q_span_excise", qSpanExcise, qSpanExciseSql),
+    Query("q_repeated_spans", qRepeatedSpans, qRepeatedSpansSql),
+    Query("q_range_join", qRangeJoin, qRangeJoinSql),
+    Query("q_bloom_semi", qBloomSemi, qBloomSemiSql),
+    Query("q_centroids", qCentroids, qCentroidsSql),
+    Query("q_repetition", qRepetition, qRepetitionSql),
+    Query("q_pivot_lang", qPivotLang, qPivotLangSql),
+    Query("q_overlap_join", qOverlapJoin, qOverlapJoinSql),
+    Query("q_quantiles", qQuantiles, qQuantilesSql),
+    Query("q_boilerplate", qBoilerplate, qBoilerplateSql),
+    Query("q_contamination", qContamination, qContaminationSql),
+    Query("q_packing", qPacking, qPackingSql),
+    Query("q_mixture", qMixture, qMixtureSql),
+    Query("q_pagerank", qPageRank, qPageRankSql),
+    Query("q_ppr", qPpr, qPprSql),
+    Query("q_bfs", qBfs, qBfsSql),
+    Query("q_triangles", qTriangles, qTrianglesSql),
+    Query("q_assortativity", qAssortativity, qAssortativitySql),
+    Query("q_kcore", qKcore, qKcoreSql),
+    Query("q_skew_report", qSkewReport, qSkewReportSql),
+    Query("q_bucket_join", qBucketJoin, qBucketJoinSql),
+    Query("q_epoch_shuffle", qEpochShuffle, qEpochShuffleSql),
+    Query("q_partition_prune", qPartitionPrune, qPartitionPruneSql),
+    Query("q_mor_delete", qMorDelete, qMorDeleteSql),
+    Query("q_mor_upsert", qMorUpsert, qMorUpsertSql),
+    Query("q_version_diff", qVersionDiff, qVersionDiffSql),
   )
 }

@@ -134,15 +134,11 @@ object QueriesSeq {
        |FROM m""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_gumbel" -> (qGumbel _),
-    "q_seq_mine" -> (qSeqMine _),
-    "q_hampel" -> (qHampel _),
-    "q_theil" -> (qTheil _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_gumbel" -> qGumbelSql,
-    "q_seq_mine" -> qSeqMineSql,
-    "q_hampel" -> qHampelSql,
-    "q_theil" -> qTheilSql)
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_gumbel", qGumbel, qGumbelSql),
+    Query("q_seq_mine", qSeqMine, qSeqMineSql),
+    Query("q_hampel", qHampel, qHampelSql),
+    Query("q_theil", qTheil, qTheilSql),
+  )
 }

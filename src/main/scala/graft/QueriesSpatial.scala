@@ -164,17 +164,11 @@ object QueriesSpatial {
        |WHERE ${graft.functions.PointInPolygon.sql("plon", "plat", FencePoly)}"""
       .stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_geo_nearest" -> (qGeoNearest _),
-    "q_geo_radius" -> (qGeoRadius _),
-    "q_geohash" -> (qGeohash _),
-    "q_point_in_poly" -> (qPointInPoly _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_geo_nearest" -> qGeoNearestSql,
-    "q_geo_radius" -> qGeoRadiusSql,
-    "q_geohash" -> qGeohashSql,
-    "q_point_in_poly" -> qPointInPolySql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_geo_nearest", qGeoNearest, qGeoNearestSql),
+    Query("q_geo_radius", qGeoRadius, qGeoRadiusSql),
+    Query("q_geohash", qGeohash, qGeohashSql),
+    Query("q_point_in_poly", qPointInPoly, qPointInPolySql),
   )
 }

@@ -731,45 +731,25 @@ object QueriesStats {
        |SELECT p_brand, p, rank, p_adj, p_adj <= $BhAlpha AS reject
        |FROM adj""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bh_adjust" -> (qBhAdjust _),
-    "q_did" -> (qDid _),
-    "q_cuped" -> (qCuped _),
-    "q_bootstrap_se" -> (qBootstrapSe _),
-    "q_corr_matrix" -> (qCorrMatrix _),
-    "q_mannwhitney" -> (qMannWhitney _),
-    "q_spearman" -> (qSpearman _),
-    "q_scale_features" -> (qScaleFeatures _),
-    "q_ks" -> (qKs _),
-    "q_gini" -> (qGini _),
-    "q_welch" -> (qWelch _),
-    "q_corr" -> (qCorr _),
-    "q_chisq" -> (qChisq _),
-    "q_trend" -> (qTrend _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_impute" -> (qImpute _),
-    "q_paths" -> (qPaths _),
-    "q_histogram" -> (qHistogram _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_bh_adjust" -> qBhAdjustSql,
-    "q_did" -> qDidSql,
-    "q_cuped" -> qCupedSql,
-    "q_bootstrap_se" -> qBootstrapSeSql,
-    "q_corr_matrix" -> qCorrMatrixSql,
-    "q_mannwhitney" -> qMannWhitneySql,
-    "q_spearman" -> qSpearmanSql,
-    "q_scale_features" -> qScaleFeaturesSql,
-    "q_ks" -> qKsSql,
-    "q_gini" -> qGiniSql,
-    "q_welch" -> qWelchSql,
-    "q_corr" -> qCorrSql,
-    "q_chisq" -> qChisqSql,
-    "q_trend" -> qTrendSql,
-    "q_winsorize" -> qWinsorizeSql,
-    "q_impute" -> qImputeSql,
-    "q_paths" -> qPathsSql,
-    "q_histogram" -> qHistogramSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_bh_adjust", qBhAdjust, qBhAdjustSql),
+    Query("q_did", qDid, qDidSql),
+    Query("q_cuped", qCuped, qCupedSql),
+    Query("q_bootstrap_se", qBootstrapSe, qBootstrapSeSql),
+    Query("q_corr_matrix", qCorrMatrix, qCorrMatrixSql),
+    Query("q_mannwhitney", qMannWhitney, qMannWhitneySql),
+    Query("q_spearman", qSpearman, qSpearmanSql),
+    Query("q_scale_features", qScaleFeatures, qScaleFeaturesSql),
+    Query("q_ks", qKs, qKsSql),
+    Query("q_gini", qGini, qGiniSql),
+    Query("q_welch", qWelch, qWelchSql),
+    Query("q_corr", qCorr, qCorrSql),
+    Query("q_chisq", qChisq, qChisqSql),
+    Query("q_trend", qTrend, qTrendSql),
+    Query("q_winsorize", qWinsorize, qWinsorizeSql),
+    Query("q_impute", qImpute, qImputeSql),
+    Query("q_paths", qPaths, qPathsSql),
+    Query("q_histogram", qHistogram, qHistogramSql),
   )
 }

@@ -910,55 +910,30 @@ object QueriesText {
   // ------------------------------------------------------------- registry
   // (the dedup-prep and denoising-objective families live in
   // QueriesTextDedup / QueriesTextObjectives)
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_vocab_coverage" -> (qVocabCoverage _),
-    "q_char_entropy" -> (qCharEntropy _),
-    "q_lexical_stats" -> (qLexicalStats _),
-    "q_fertility" -> (qFertility _),
-    "q_mojibake" -> (qMojibake _),
-    "q_text_stats" -> (qTextStats _),
-    "q_lang_id" -> (qLangId _),
-    "q_langid_kappa" -> (qLangIdKappa _),
-    "q_tfidf" -> (qTfidf _),
-    "q_js_div" -> (qJsDiv _),
-    "q_readability" -> (qReadability _),
-    "q_pii_redact" -> (qPiiRedact _),
-    "q_gopher_quality" -> (qGopherQuality _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_top_fraction" -> (qTopFraction _),
-    "q_quality_hist" -> (qQualityHist _),
-    "q_strata_report" -> (qStrataReport _),
-    "q_bm25" -> (qBm25 _),
-    "q_bm25_multi" -> (qBm25Multi _),
-    "q_ngram_lm" -> (qNgramLm _),
-    "q_pmi" -> (qPmi _),
-    "q_dsir" -> (qDsir _),
-    "q_pct_rank" -> (qPctRank _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_vocab_coverage" -> qVocabCoverageSql,
-    "q_char_entropy" -> qCharEntropySql,
-    "q_lexical_stats" -> qLexicalStatsSql,
-    "q_fertility" -> qFertilitySql,
-    "q_mojibake" -> qMojibakeSql,
-    "q_text_stats" -> qTextStatsSql,
-    "q_lang_id" -> qLangIdSql,
-    "q_langid_kappa" -> qLangIdKappaSql,
-    "q_tfidf" -> qTfidfSql,
-    "q_js_div" -> qJsDivSql,
-    "q_readability" -> qReadabilitySql,
-    "q_pii_redact" -> qPiiRedactSql,
-    "q_gopher_quality" -> qGopherQualitySql,
-    "q_weighted_sample" -> qWeightedSampleSql,
-    "q_top_fraction" -> qTopFractionSql,
-    "q_quality_hist" -> qQualityHistSql,
-    "q_strata_report" -> qStrataReportSql,
-    "q_bm25" -> qBm25Sql,
-    "q_bm25_multi" -> qBm25MultiSql,
-    "q_ngram_lm" -> qNgramLmSql,
-    "q_pmi" -> qPmiSql,
-    "q_dsir" -> qDsirSql,
-    "q_pct_rank" -> qPctRankSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_vocab_coverage", qVocabCoverage, qVocabCoverageSql),
+    Query("q_char_entropy", qCharEntropy, qCharEntropySql),
+    Query("q_lexical_stats", qLexicalStats, qLexicalStatsSql),
+    Query("q_fertility", qFertility, qFertilitySql),
+    Query("q_mojibake", qMojibake, qMojibakeSql),
+    Query("q_text_stats", qTextStats, qTextStatsSql),
+    Query("q_lang_id", qLangId, qLangIdSql),
+    Query("q_langid_kappa", qLangIdKappa, qLangIdKappaSql),
+    Query("q_tfidf", qTfidf, qTfidfSql),
+    Query("q_js_div", qJsDiv, qJsDivSql),
+    Query("q_readability", qReadability, qReadabilitySql),
+    Query("q_pii_redact", qPiiRedact, qPiiRedactSql),
+    Query("q_gopher_quality", qGopherQuality, qGopherQualitySql),
+    Query("q_weighted_sample", qWeightedSample, qWeightedSampleSql),
+    Query("q_top_fraction", qTopFraction, qTopFractionSql),
+    Query("q_quality_hist", qQualityHist, qQualityHistSql),
+    Query("q_strata_report", qStrataReport, qStrataReportSql),
+    Query("q_bm25", qBm25, qBm25Sql),
+    Query("q_bm25_multi", qBm25Multi, qBm25MultiSql),
+    Query("q_ngram_lm", qNgramLm, qNgramLmSql),
+    Query("q_pmi", qPmi, qPmiSql),
+    Query("q_dsir", qDsir, qDsirSql),
+    Query("q_pct_rank", qPctRank, qPctRankSql),
   )
 }

@@ -549,45 +549,24 @@ object QueriesTextDedup {
        |FROM ne CROSS JOIN nc CROSS JOIN h""".stripMargin
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_lsh_quality" -> (qLshQuality _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_ngram" -> (qDedupNgram _),
-    "q_dedup_ngram_prefix" -> (qDedupNgramPrefix _),
-    "q_minhash_sig" -> (qMinhashSig _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_keepbest" -> (qDedupKeepBest _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_wor_sample" -> (qWorSample _),
-    "q_feature_hash" -> (qFeatureHash _),
-    "q_rrf" -> (qRrf _),
-    "q_simhash_pairs" -> (qSimhashPairs _),
-    "q_embed_topk" -> (qEmbedTopk _),
-    "q_knn_label" -> (qKnnLabel _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_split_leakfree" -> (qSplitLeakfree _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_lsh_quality" -> qLshQualitySql,
-    "q_fingerprint" -> qFingerprintSql,
-    "q_dedup_exact" -> qDedupExactSql,
-    "q_dedup_ngram" -> qDedupNgramSql,
-    "q_dedup_ngram_prefix" -> qDedupNgramSql,
-    "q_minhash_sig" -> qMinhashSigSql,
-    "q_dedup_minhash" -> qDedupMinhashSql,
-    "q_dedup_clusters" -> qDedupClustersSql,
-    "q_dedup_keepbest" -> qDedupKeepBestSql,
-    "q_sample_stratified" -> qSampleStratifiedSql,
-    "q_wor_sample" -> qWorSampleSql,
-    "q_feature_hash" -> qFeatureHashSql,
-    "q_rrf" -> qRrfSql,
-    "q_simhash_pairs" -> qSimhashPairsSql,
-    "q_embed_topk" -> qEmbedTopkSql,
-    "q_knn_label" -> qKnnLabelSql,
-    "q_ann_ivf" -> qAnnIvfSql,
-    "q_split_leakfree" -> qSplitLeakfreeSql,
+  val all: Seq[Query] = Seq(
+    Query("q_lsh_quality", qLshQuality, qLshQualitySql),
+    Query("q_fingerprint", qFingerprint, qFingerprintSql),
+    Query("q_dedup_exact", qDedupExact, qDedupExactSql),
+    Query("q_dedup_ngram", qDedupNgram, qDedupNgramSql),
+    Query("q_dedup_ngram_prefix", qDedupNgramPrefix, qDedupNgramSql),
+    Query("q_minhash_sig", qMinhashSig, qMinhashSigSql),
+    Query("q_dedup_minhash", qDedupMinhash, qDedupMinhashSql),
+    Query("q_dedup_clusters", qDedupClusters, qDedupClustersSql),
+    Query("q_dedup_keepbest", qDedupKeepBest, qDedupKeepBestSql),
+    Query("q_sample_stratified", qSampleStratified, qSampleStratifiedSql),
+    Query("q_wor_sample", qWorSample, qWorSampleSql),
+    Query("q_feature_hash", qFeatureHash, qFeatureHashSql),
+    Query("q_rrf", qRrf, qRrfSql),
+    Query("q_simhash_pairs", qSimhashPairs, qSimhashPairsSql),
+    Query("q_embed_topk", qEmbedTopk, qEmbedTopkSql),
+    Query("q_knn_label", qKnnLabel, qKnnLabelSql),
+    Query("q_ann_ivf", qAnnIvf, qAnnIvfSql),
+    Query("q_split_leakfree", qSplitLeakfree, qSplitLeakfreeSql),
   )
 }

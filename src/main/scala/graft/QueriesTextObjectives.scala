@@ -156,15 +156,9 @@ object QueriesTextObjectives {
   }
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_span_corrupt" -> (qSpanCorrupt _),
-    "q_fim" -> (qFim _),
-    "q_mlm_mask" -> (qMlmMask _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_span_corrupt" -> qSpanCorruptSql,
-    "q_fim" -> qFimSql,
-    "q_mlm_mask" -> qMlmMaskSql,
+  val all: Seq[Query] = Seq(
+    Query("q_span_corrupt", qSpanCorrupt, qSpanCorruptSql),
+    Query("q_fim", qFim, qFimSql),
+    Query("q_mlm_mask", qMlmMask, qMlmMaskSql),
   )
 }

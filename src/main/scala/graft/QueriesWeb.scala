@@ -302,21 +302,13 @@ object QueriesWeb {
       |FROM r""".stripMargin
 
   // ------------------------------------------------------------------ maps
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_url_parse" -> (qUrlParse _),
-    "q_domain_stats" -> (qDomainStats _),
-    "q_domain_quota" -> (qDomainQuota _),
-    "q_domain_psl" -> (qDomainPsl _),
-    "q_domain_rules" -> (qDomainRules _),
-    "q_unicode_nfc" -> (qUnicodeNfc _),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_url_parse" -> qUrlParseSql,
-    "q_domain_stats" -> qDomainStatsSql,
-    "q_domain_quota" -> qDomainQuotaSql,
-    "q_domain_psl" -> qDomainPslSql,
-    "q_domain_rules" -> qDomainRulesSql,
-    "q_unicode_nfc" -> qUnicodeNfcSql,
+  // ------------------------------------------------------------- registry
+  val all: Seq[Query] = Seq(
+    Query("q_url_parse", qUrlParse, qUrlParseSql),
+    Query("q_domain_stats", qDomainStats, qDomainStatsSql),
+    Query("q_domain_quota", qDomainQuota, qDomainQuotaSql),
+    Query("q_domain_psl", qDomainPsl, qDomainPslSql),
+    Query("q_domain_rules", qDomainRules, qDomainRulesSql),
+    Query("q_unicode_nfc", qUnicodeNfc, qUnicodeNfcSql),
   )
 }

@@ -35,26 +35,14 @@ import org.apache.spark.sql.functions._
   * z-order clustered write, compaction+recluster, Bloom index build,
   * merge-on-read versioned read) with per-run scratch dirs →
   * scalecheck_writes.json.
+  *
+  * Shuffle partitions default to the core count. On a real cluster
+  * shuffle parallelism scales with data, and a fixed local partition
+  * count under-parallelizes the scaled run and overstates the exponent;
+  * to test that, raise it with
+  * `SPARK_GRAFT_EXTRA_CONF=spark.sql.shuffle.partitions=N`.
   */
 object ScaleCheck {
-
-  private def session(): SparkSession = {
-    val cpus = Bench.cpusFromEnv(16)
-    // On a real cluster shuffle parallelism scales with data; a fixed
-    // local partition count under-parallelizes the scaled run and
-    // overstates the exponent — override to test that hypothesis.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
 
   /** Offset: the smallest power of ten above the column's max, so
     * shifted ids stay disjoint and human-readable per copy. */
@@ -741,8 +729,7 @@ object ScaleCheck {
     val baseDir = args(1)
     val outDir = args(2)
     val copies = args(3).toInt
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(16)
     mode match {
       case "gen" => gen(spark, baseDir, outDir, copies)
       case "run" =>

@@ -6,11 +6,16 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.operators.{FullCopy, IncrementalSync}
 
+/** One registered query: the Spark plan over a scale-factor dir and the
+  * DuckDB SQL that must produce the same rows. */
+final case class Query(name: String,
+    plan: (SparkSession, String) => DataFrame, oracleSql: String)
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every entry in `queries` exercises a library operator (graft.operators /
-  * graft.clean / graft.dedup / ...) against the driver testdata; the
-  * matching `oracleSql` is ANSI SQL that DuckDB evaluates over the same
+  * Every `Query` in `all` exercises a library operator (graft.operators /
+  * graft.clean / graft.dedup / ...) against the test data; its
+  * `oracleSql` is ANSI SQL that DuckDB evaluates over the same
   * parquet tables. Aggregates are computed in DECIMAL on both sides (double
   * summation order is engine-dependent; decimal summation is not) and the
   * FINAL compared column is cast to DOUBLE: the driver reads Spark's parquet
@@ -186,29 +191,44 @@ object SparkEntry {
       |  COALESCE(n_name, 'desconhecido') AS nation_name
       |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey""".stripMargin
 
-  // ------------------------------------------------------------------ maps
+  // ------------------------------------------------------------- registry
+  private val own: Seq[Query] = Seq(
+    Query("q1_agg", q1Agg, q1AggSql),
+    Query("q_full_copy", qFullCopy, qFullCopySql),
+    Query("q_source_query", qSourceQuery, sourceQuerySql),
+    Query("q_key_range", qKeyRange, qKeyRangeSql),
+    Query("q_watermark_inc", qWatermarkInc, qWatermarkIncSql),
+    Query("q_merge_incremental", qMergeIncremental, qMergeIncrementalSql),
+    Query("q_exclusion_delete", qExclusionDelete, qExclusionDeleteSql),
+    Query("q_dedup_keep_first", qDedupKeepFirst, qDedupKeepFirstSql),
+    Query("q_mapping_join", qMappingJoin, qMappingJoinSql),
+  )
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q_full_copy" -> (qFullCopy _),
-    "q_source_query" -> (qSourceQuery _),
-    "q_key_range" -> (qKeyRange _),
-    "q_watermark_inc" -> (qWatermarkInc _),
-    "q_merge_incremental" -> (qMergeIncremental _),
-    "q_exclusion_delete" -> (qExclusionDelete _),
-    "q_dedup_keep_first" -> (qDedupKeepFirst _),
-    "q_mapping_join" -> (qMappingJoin _),
-  ) ++ QueriesClean.queries ++ QueriesText.queries ++ QueriesTextDedup.queries ++ QueriesTextObjectives.queries ++ QueriesOps.queries ++ QueriesExtra.queries ++ QueriesEvents.queries ++ QueriesLifecycle.queries ++ QueriesFunnel.queries ++ QueriesScale.queries ++ QueriesOverlap.queries ++ QueriesSpatial.queries ++ QueriesProjection.queries ++ QueriesMatch.queries ++ QueriesStats.queries ++ QueriesAgreement.queries ++ QueriesInference.queries ++ QueriesSeq.queries ++ QueriesNb.queries ++ QueriesRank.queries ++ QueriesQuality.queries ++ QueriesRelational.queries ++ QueriesWeb.queries ++ QueriesPrivacy.queries ++ QueriesModel.queries ++ QueriesGraph.queries ++ QueriesInfo.queries
+  /** Every registered query, in registration order. Built on first use,
+    * which fails if two entries share a name. */
+  lazy val all: Seq[Query] = distinctNames(Seq(own, QueriesClean.all,
+    QueriesText.all, QueriesTextDedup.all, QueriesTextObjectives.all,
+    QueriesOps.all, QueriesExtra.all, QueriesEvents.all,
+    QueriesLifecycle.all, QueriesFunnel.all, QueriesScale.all,
+    QueriesOverlap.all, QueriesSpatial.all, QueriesProjection.all,
+    QueriesMatch.all, QueriesStats.all, QueriesAgreement.all,
+    QueriesInference.all, QueriesSeq.all, QueriesNb.all, QueriesRank.all,
+    QueriesQuality.all, QueriesRelational.all, QueriesWeb.all,
+    QueriesPrivacy.all, QueriesModel.all, QueriesGraph.all,
+    QueriesInfo.all).flatten)
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q_full_copy" -> qFullCopySql,
-    "q_source_query" -> sourceQuerySql,
-    "q_key_range" -> qKeyRangeSql,
-    "q_watermark_inc" -> qWatermarkIncSql,
-    "q_merge_incremental" -> qMergeIncrementalSql,
-    "q_exclusion_delete" -> qExclusionDeleteSql,
-    "q_dedup_keep_first" -> qDedupKeepFirstSql,
-    "q_mapping_join" -> qMappingJoinSql,
-  ) ++ QueriesClean.oracleSql ++ QueriesText.oracleSql ++ QueriesTextDedup.oracleSql ++ QueriesTextObjectives.oracleSql ++ QueriesOps.oracleSql ++ QueriesExtra.oracleSql ++ QueriesEvents.oracleSql ++ QueriesLifecycle.oracleSql ++ QueriesFunnel.oracleSql ++ QueriesScale.oracleSql ++ QueriesOverlap.oracleSql ++ QueriesSpatial.oracleSql ++ QueriesProjection.oracleSql ++ QueriesMatch.oracleSql ++ QueriesStats.oracleSql ++ QueriesAgreement.oracleSql ++ QueriesInference.oracleSql ++ QueriesSeq.oracleSql ++ QueriesNb.oracleSql ++ QueriesRank.oracleSql ++ QueriesQuality.oracleSql ++ QueriesRelational.oracleSql ++ QueriesWeb.oracleSql ++ QueriesPrivacy.oracleSql ++ QueriesModel.oracleSql ++ QueriesGraph.oracleSql ++ QueriesInfo.oracleSql
+  /** `qs` unchanged, or an error naming every name registered twice. */
+  private[graft] def distinctNames(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** `all` keyed by name, for callers that look one query up. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.plan).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    all.map(q => q.name -> q.oracleSql).toMap
 }

@@ -25,17 +25,11 @@ object Tables {
     * amortized across every downstream expression). Disable per-call for
     * pure scan->sink copies where the extra exchange buys nothing.
     */
-  // diagnosis knob (A/B the scan-parallelism exchange): 0 disables the
-  // round-robin repartition below for a measurement run — never set in
-  // a graded pass
-  private val repartKnob =
-    sys.env.getOrElse("SPARK_GRAFT_LOAD_REPART", "1") != "0"
-
   def load(spark: SparkSession, dir: String, name: String,
       parallelize: Boolean = true): DataFrame = {
     val raw = spark.read.parquet(s"$dir/$name.parquet")
     val df =
-      if (parallelize && repartKnob &&
+      if (parallelize &&
           raw.rdd.getNumPartitions < spark.sparkContext.defaultParallelism / 2)
         raw.repartition(spark.sparkContext.defaultParallelism)
       else raw

@@ -1,61 +1,36 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry query result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`scripts/check.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName ...] — trailing names (local
     // iteration only; the driver passes two args) restrict the run.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = Bench.cpusFromEnv(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     new java.io.File(outDir).mkdirs()
     // Failures are collected into _FAILURES.json (not only stderr): a
     // query that throws must surface as an explicit FAIL row in the local
     // gate, not as a silently-missing output dir (round-7 lesson — five
     // dead queries shipped unnoticed because the throw was swallowed).
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.all.filter(q => only.isEmpty || only(q.name)).foreach { q =>
+      try q.plan(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failures += ((name, e.getClass.getName,
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        failures += ((q.name, e.getClass.getName,
           Option(e.getMessage).getOrElse("").take(500)))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val js = Harness.jsonString _
+    val json = SparkEntry.all
+      .map(q => s"${js(q.name)}: ${js(q.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failJson = failures
       .map { case (n, cls, msg) =>
-        s"${q(n)}: {${q("exception")}: ${q(cls)}, ${q("message")}: ${q(msg)}}" }
+        s"${js(n)}: {${js("exception")}: ${js(cls)}, ${js("message")}: ${js(msg)}}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_FAILURES.json"), failJson)
     spark.stop()

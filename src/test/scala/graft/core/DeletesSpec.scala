@@ -3,7 +3,7 @@ package graft.core
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftTestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
@@ -218,7 +218,7 @@ class DeletesSpec extends SparkSpec {
         (1L to 5L).foreach(v => Snapshots.read(spark, dir, Some(v)))
         Snapshots.read(spark, dir)
         val m = Deletes.readMerged(spark, dir)
-        GraftTestBus.drain(sc)
+        GraftBus.drain(sc)
         m
       } finally {
         sc.clearJobGroup()

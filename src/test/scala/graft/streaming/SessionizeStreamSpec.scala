@@ -68,7 +68,7 @@ class SessionizeStreamSpec extends SparkSpec {
   }
 
   test("streaming sessionizer agrees with the batch lag+cumsum form") {
-    val batch = graft.QueriesEvents.queries("q_sessionize")(
+    val batch = graft.SparkEntry.queries("q_sessionize")(
       spark, "/root/testdata/sf0.001")
       .select("event_id", "user_id", "session_idx")
       .as[(Long, Long, Long)].collect().toSet
