@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+
 /** Connected components over a pair table — the step that turns near-dup
   * PAIRS (minhash/simhash/ngram/embedding candidates) into dedup
   * CLUSTERS: every document gets the minimum reachable document id as its
@@ -71,63 +73,60 @@ object ConnectedComponents {
     // aggregation whose own ENSURE exchange restores parallelism, so
     // the pin's extra per-round exchange was pure overhead — measured
     // +0.8–5 s across the CC-composite queries, OPTIMIZATION_r14.md.)
-    var e = raw.filter(col("u") =!= col("v"))
+    val canonical = raw.filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .distinct()
-      .localCheckpoint()
-    graft.core.Checkpoints.releaseLocal(raw) // both consumers are cut
-    var eCount = e.count()
-    var iter = 0
-    var converged = eCount == 0L
-    // `<= maxIter`: a graph whose LAST edge-set change lands exactly in
-    // round maxIter still gets the confirmation round that observes the
-    // fixpoint (same edge as labelsPropagation's confirmation round)
-    while (!converged && iter <= maxIter) {
-      // large-star: every node u links its STRICTLY LARGER neighbors to
-      // the minimum of its full neighborhood (m <= u < v, so the emitted
-      // (v, m) pairs stay big->small oriented)
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy(col("u"))
-        .agg(min(col("v")).as("nmin"))
-        .select(col("u"), least(col("u"), col("nmin")).as("m"))
-      val ls = sym.join(lsMin, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-      // small-star: on the big->small orientation, every node u links its
-      // smaller neighbors AND ITSELF to its minimum neighbor
-      val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = ls.join(ssMin, Seq("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(ssMin.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
-      val nextCount = next.count()
+    // `maxIter + 1` rounds: a graph whose LAST edge-set change lands
+    // exactly in round maxIter still gets the confirmation round that
+    // observes the fixpoint (same edge as labelsPropagation's)
+    val res = Fixpoint.iterate(canonical, maxIter + 1) { g =>
+      if (g.round == 0) Fixpoint.releaseLocal(raw) // both consumers are cut
+      // an empty edge set is already the fixpoint; a star round never
+      // empties a non-empty one, so this only stops before round 1
+      if (g.rows == 0L) None else Some(starRound(g.df))
+    } { (prev, next) =>
       // both sides are distinct canonical sets: equal count + empty
       // difference <=> equal sets <=> fixpoint (a star per component)
-      converged = nextCount == eCount && next.except(e).isEmpty
-      // the superseded generation's blocks release immediately (the
-      // convergence check above was its last reader)
-      graft.core.Checkpoints.releaseLocal(e)
-      e = next
-      eCount = nextCount
-      iter += 1
+      next.rows == prev.rows && next.df.except(prev.df).isEmpty
     }
     // A truncated fixpoint loop yields silently WRONG cluster ids (nodes
     // still pointing at non-minimum intermediates) — fail, don't return.
-    if (!converged)
+    if (!res.stopped)
       sys.error(
         s"ConnectedComponents did not converge after $maxIter star rounds " +
           "(edge set still changing); raise maxIter — alternating " +
           "large-star/small-star needs O(log n) rounds.")
     // fixpoint edges are (member, component-min); roots carry no out-edge
     val labeled = allNodes.join(
-        e.select(col("u").as("id"), col("v").as("cluster_id")), Seq("id"),
-        "left")
+        res.last.df.select(col("u").as("id"), col("v").as("cluster_id")),
+        Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-    (labeled, iter)
+    (labeled, res.rounds)
+  }
+
+  /** One alternating large-star / small-star round over a canonical
+    * (big -> small) edge set. */
+  private def starRound(e: DataFrame): DataFrame = {
+    // large-star: every node u links its STRICTLY LARGER neighbors to
+    // the minimum of its full neighborhood (m <= u < v, so the emitted
+    // (v, m) pairs stay big->small oriented)
+    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    val lsMin = sym.groupBy(col("u"))
+      .agg(min(col("v")).as("nmin"))
+      .select(col("u"), least(col("u"), col("nmin")).as("m"))
+    val ls = sym.join(lsMin, Seq("u"))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .distinct()
+    // small-star: on the big->small orientation, every node u links its
+    // smaller neighbors AND ITSELF to its minimum neighbor
+    val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
+    ls.join(ssMin, Seq("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .union(ssMin.select(col("u"), col("m").as("v")))
+      .filter(col("u") =!= col("v"))
+      .distinct()
   }
 
   /** Iterative min-label propagation — the independent cross-check for
@@ -143,40 +142,39 @@ object ConnectedComponents {
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("cluster_id", col("id"))
-      .localCheckpoint()
-    var iter = 0
-    var changed = 1L
-    // `<= maxIter`: a graph whose LAST label change lands exactly in
-    // round maxIter must still get its confirmation round (changed == 0)
-    // instead of being rejected as non-converged
-    while (changed > 0 && iter <= maxIter) {
+    var changed = 0L
+    // `maxIter + 1` rounds: a graph whose LAST label change lands
+    // exactly in round maxIter must still get its confirmation round
+    // (changed == 0) instead of being rejected as non-converged
+    val res = Fixpoint.iterate(
+        sym.select(col("src").as("id")).distinct()
+          .withColumn("cluster_id", col("id")), maxIter + 1) { g =>
+      val labels = g.df.drop("__changed")
       val nbrMin = sym
         .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("cluster_id")).as("nbr_min"))
       // __changed rides inside the checkpointed generation so the
       // convergence count reads the same blocks the next round joins
-      val next = labels.join(nbrMin, Seq("id"), "left")
+      Some(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
             .as("cluster_id"),
-          (col("nbr_min") < col("cluster_id")).as("__changed"))
-        .localCheckpoint()
-      changed = next.filter(col("__changed")).count()
-      labels = next.drop("__changed")
-      iter += 1
+          (col("nbr_min") < col("cluster_id")).as("__changed")))
+    } { (_, next) =>
+      changed = next.df.filter(col("__changed")).count()
+      changed == 0
     }
+    Fixpoint.releaseLocal(sym) // the last generation no longer reads it
     // A truncated fixpoint is indistinguishable from a converged one to
     // the caller but yields silently WRONG cluster ids (a >maxIter-hop
     // chain keeps multiple labels per component) — fail, don't return.
-    if (changed > 0)
+    if (!res.stopped)
       sys.error(
         s"ConnectedComponents did not converge after $maxIter iterations " +
           s"($changed labels still changing); raise maxIter — rounds needed " +
           "equal the longest min-label path in any component.")
-    labels
+    res.last.df.drop("__changed")
   }
 
   /** Cluster summary: representative (= cluster_id, the minimum member),

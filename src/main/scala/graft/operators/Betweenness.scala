@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+import graft.core.Fixpoint.pinSmall
+
 /** Landmark-sampled betweenness centrality (Brandes 2001, the
   * k-source sample of Brandes & Pich 2007) — "which nodes do shortest
   * paths FLOW THROUGH?", the broker readout that closeness (volume of
@@ -14,7 +17,7 @@ import org.apache.spark.sql.functions._
   * widened with path COUNTS — σ(s,v) accumulates as an exact
   * DECIMAL(38,0) sum of predecessor σ along each BFS layer, one
   * edge-keyed join + (seed, node) aggregate per hop, each layer
-  * checkpointed (the fixpoint rule).
+  * checkpointed by [[graft.core.Fixpoint.frontier]].
   *
   * Phase 2 (backward): dependency δ walks the layers deepest-first:
   * δ(u) = Σ_{v ∈ succ(u)} (σu/σv)·(1 + δv). Each per-edge
@@ -62,73 +65,32 @@ object Betweenness {
       .select(col(landmarkCol).as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"),
         lit(1L).cast("decimal(38,0)").as("sigma"))
-      .localCheckpoint()
-    // forward: one frame per BFS layer, each carrying exact path
-    // counts. The visited set is ONE running (seed, node) frame,
-    // re-checkpointed per hop (the ShortestPaths.fromSources
-    // treatment): round d anti-joins one frame — O(depth) cumulative
-    // layer scans, not the O(depth²) lazy re-union of all prior layers.
-    val nPart = edges.sparkSession
-      .conf.get("spark.sql.shuffle.partitions").toInt
-    import graft.core.Checkpoints.{pinSmall, PinMaxRows}
-    // per-layer row counts: the convergence probe (count == 0 replaces
-    // isEmpty — same one job over the materialized blocks) doubles as
-    // the size signal for the pin-on-small checkpoints (see
-    // Checkpoints.pinSmall: AQE coalesces these byte-tiny frames to 1
-    // partition and the checkpoint bakes that in; the backward phase's
-    // broadcast-probe fan-out then ran single-task, measured 5.7 s a
-    // stage in plans/r14/q_betweenness_before)
-    val seedRows = seed.count()
-    var seen = pinSmall(seed.select("seed", "node"), seedRows,
-      Seq("seed", "node")).localCheckpoint()
-    var seenRows = seedRows
-    var layers = Vector(seed)
-    var layerRows = Vector(seedRows)
-    var frontier = seed
-    var hop = 0
-    var done = false
-    while (!done && hop < maxHops) {
-      // σ-sum BEFORE the anti join (guide §2.3 — aggregate, then
-      // shuffle less): partial map-side sums compress the per-
-      // predecessor fan-out, and the anti join removes whole
-      // (seed, node) groups, so summing first is exactly equivalent.
-      // With `seen` pinned, its checkpoint carries
-      // HashPartitioning((seed, node), nPart) and the anti join
-      // re-shuffles NOTHING on the seen side.
-      val next = pinSmall(
+    // forward: one checkpointed frame per BFS layer carrying exact path
+    // counts, each pinned by the driver's layer counts (Fixpoint.pinSmall:
+    // unpinned, the backward phase's broadcast probes ran single-task,
+    // 5.7 s a stage in plans/r14/q_betweenness_before)
+    val fwd = Fixpoint.frontier(seed, Seq("seed", "node"), maxHops) {
+      (frontier, seen) =>
+        // σ-sum BEFORE the anti join (guide §2.3 — aggregate, then
+        // shuffle less): partial map-side sums compress the per-
+        // predecessor fan-out, and the anti join removes whole
+        // (seed, node) groups, so summing first is exactly equivalent.
+        // `seen` is pinned on (seed, node): the anti join re-shuffles
+        // NOTHING on the seen side.
         frontier.join(e, col("node") === col("__src"))
           .select(col("seed"), col("__dst").as("node"), col("sigma"))
           .groupBy(col("seed"), col("node"))
           .agg(sum(col("sigma")).as("sigma"))
-          .join(seen, Seq("seed", "node"), "left_anti"),
-        layerRows.last, Seq("seed", "node"))
-        .localCheckpoint()
-      hop += 1
-      val cnt = next.count()
-      done = cnt == 0
-      if (!done) {
-        layers = layers :+ next
-        layerRows = layerRows :+ cnt
-        frontier = next
-        val prev = seen
-        seenRows += cnt
-        val grown = prev.unionByName(next.select("seed", "node"))
-        seen = (if (seenRows <= PinMaxRows)
-            pinSmall(grown, seenRows, Seq("seed", "node"))
-          else grown.coalesce(nPart)).localCheckpoint()
-        graft.core.Checkpoints.releaseLocal(prev)
-      } else {
-        // release the terminal empty generation's checkpoint blocks
-        graft.core.Checkpoints.releaseLocal(next)
-      }
+          .join(seen, Seq("seed", "node"), "left_anti")
     }
+    val layers = fwd.layers.map(_.df)
+    val layerRows = fwd.layers.map(_.rows)
     // saturation indicator: the loop stopped at the hop budget with a
     // live frontier — deeper layers exist that seeded no dependency, so
     // bc is biased LOW (the scaladoc horizon-truncation caveat, now a
     // readable output instead of prose). false = the frontier exhausted
     // itself inside the budget and the sampled accumulation is complete.
-    val hitMaxHops = !done
-    graft.core.Checkpoints.releaseLocal(seen)
+    val hitMaxHops = fwd.hitMaxHops
     // backward: delta in exact micro units, deepest layer first. Every
     // delta frame is pinned by its (known) layer count before the
     // checkpoint: the contrib join below probes TWO broadcast hash
@@ -170,11 +132,15 @@ object Betweenness {
       col("node"), col("delta")))
     val out =
       if (acc.isEmpty)
-        seed.select(col("node"), lit(0L).cast("decimal(38,0)").as("delta"))
-          .limit(0)
+        layers(0).select(col("node"),
+          lit(0L).cast("decimal(38,0)").as("delta")).limit(0)
       else acc.reduce(_ unionByName _)
-    e.unpersist(blocking = false) // every layer/delta frame is an
-    // eager checkpoint; nothing downstream re-reads e
+    // every delta frame is an eager checkpoint: nothing downstream
+    // re-reads e, deltas(0) or a forward layer — except the seed layer
+    // on the depth == 0 path, which `out` reads
+    e.unpersist(blocking = false)
+    Fixpoint.releaseLocal(deltas(0))
+    (if (depth == 0) layers.tail else layers).foreach(Fixpoint.releaseLocal)
     // 2^62 guard: a DECIMAL sum past long range would otherwise WRAP in
     // the cast (non-ANSI) — fail loudly, the contract is in the scaladoc
     val safeMax = lit("4611686018427387904").cast("decimal(38,0)")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{CacheScope, Checkpoints}
+import graft.core.{CacheScope, Fixpoint}
 import graft.functions.TextFunctions
 
 /** Byte-pair-encoding tokenizer training (Sennrich et al., "Neural
@@ -20,7 +20,7 @@ import graft.functions.TextFunctions
   * greedy left-to-right fold. 100 TB of text with a 1M-word vocabulary
   * trains on a 1M-row table after the single corpus pass; superseded
   * word-table generations are released as training advances
-  * ([[graft.core.Checkpoints]]), so storage stays one generation deep
+  * ([[graft.core.Fixpoint]]), so storage stays one generation deep
   * at any merge count.
   *
   * Determinism: the argmax tiebreak is (count DESC, left ASC, right
@@ -111,18 +111,17 @@ object BpeTrainer {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     require(batch >= 1, s"batch must be >= 1, got $batch")
     val spark = docs.sparkSession
-    var words = wordCounts(docs, textCol)
-      .select(col("word"), col("freq"), charSyms(col("word")).as("syms"))
-      .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
     var rank = 0
-    var exhausted = false
-    while (rank < nMerges && !exhausted) {
+    // every round accepts >= 1 merge, so nMerges rounds bound the loop
+    val words = Fixpoint.iterate(wordCounts(docs, textCol)
+        .select(col("word"), col("freq"), charSyms(col("word")).as("syms")),
+        nMerges) { g =>
       val want = math.min(batch, nMerges - rank)
-      val top = pairCounts(words)
+      val top = pairCounts(g.df)
         .orderBy(col("pair_count").desc, col("left"), col("right"))
         .limit(want).collect()
-      if (top.isEmpty) exhausted = true
+      if (top.isEmpty) None
       else {
         val used = scala.collection.mutable.Set.empty[String]
         val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -140,13 +139,9 @@ object BpeTrainer {
         val newSyms = accepted.foldLeft(col("syms")) {
           case (c, (l, r)) => applyMerge(c, l, r)
         }
-        val next = words
-          .select(col("word"), col("freq"), newSyms.as("syms"))
-          .localCheckpoint() // eager: materialized before the release below
-        Checkpoints.releaseLocal(words)
-        words = next
+        Some(g.df.select(col("word"), col("freq"), newSyms.as("syms")))
       }
-    }
+    }((_, _) => rank >= nMerges).last.df
     import spark.implicits._
     (merges.toSeq.toDF("rank", "left", "right"), words)
   }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+import graft.core.Fixpoint.broadcastSmall
+
 /** Bradley–Terry pairwise-preference strengths (Bradley & Terry 1952,
   * MM iteration per Hunter 2004): from (winner, loser) comparison rows,
   * the per-item strength θ under P(i beats j) = θ_i/(θ_i+θ_j) — the
@@ -68,7 +71,7 @@ object BradleyTerry {
       .join(wins, Seq("item"), "left")
       .na.fill(0L, Seq("wins"))
       .localCheckpoint()
-    graft.core.Checkpoints.releaseLocal(raw) // pairs + totals are pinned
+    Fixpoint.releaseLocal(raw) // pairs + totals are pinned
     // item count, measured once off the pinned totals: every theta
     // generation is exactly item-sized, so this licenses
     // broadcast-on-small for the per-round θ joins below — without it
@@ -76,13 +79,10 @@ object BradleyTerry {
     // re-shuffled the pair table every round (10.4 MB written + read per
     // round, StageProfile r15; guide §3.1/§2.4)
     val nItems = totals.count()
-    import graft.core.Checkpoints.broadcastSmall
-    var theta = totals.select(col("item"), lit(1.0).as("theta"))
-      .localCheckpoint()
-    var r = 0
-    while (r < iters) {
-      val ti = theta.select(col("item").as("i"), col("theta").as("__ti"))
-      val tj = theta.select(col("item").as("j"), col("theta").as("__tj"))
+    val theta = Fixpoint.iterate(
+        totals.select(col("item"), lit(1.0).as("theta")), iters) { g =>
+      val ti = g.df.select(col("item").as("i"), col("theta").as("__ti"))
+      val tj = g.df.select(col("item").as("j"), col("theta").as("__tj"))
       val denom = pairs
         .join(broadcastSmall(ti, nItems), Seq("i"))
         .join(broadcastSmall(tj, nItems), Seq("j"))
@@ -101,17 +101,13 @@ object BradleyTerry {
             col("wins").cast("double") / col("__den").cast("double"))
             .otherwise(lit(0.0))).as("__t"))
       val mx = rawTheta.agg(max(col("__t")).as("__mx"))
-      val next = rawTheta.crossJoin(broadcast(mx))
+      Some(rawTheta.crossJoin(broadcast(mx))
         .select(col("item"),
           when(col("__mx") > 0,
             wp(col("__t").cast("double") / col("__mx").cast("double"))
               .cast("double"))
-            .otherwise(lit(0.0)).as("theta"))
-        .localCheckpoint()
-      graft.core.Checkpoints.releaseLocal(theta)
-      theta = next
-      r += 1
-    }
+            .otherwise(lit(0.0)).as("theta")))
+    }((_, _) => false).last.df
     totals.join(broadcastSmall(theta, nItems), Seq("item"))
       .select(col("item"), col("wins"), col("games"), col("theta"))
   }

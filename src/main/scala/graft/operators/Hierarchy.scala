@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+
 /** Hierarchy resolution — root and depth per node of a parent-pointer
   * forest (org charts, category trees, reply threads). SQL engines do
   * this with a recursive CTE; Spark has none, and the naive loop (join
@@ -14,9 +16,9 @@ import org.apache.spark.sql.functions._
   * hierarchy. Root rows self-loop with distance 0, so composition is a
   * fixpoint once every pointer reaches a root (no overshoot).
   *
-  * Each round localCheckpoints the state (same discipline as
-  * [[PageRank]]): the plan would otherwise double per round and the
-  * lineage itself would become the bottleneck.
+  * Each round localCheckpoints the state and releases its predecessor
+  * ([[graft.core.Fixpoint]]): the plan would otherwise double per round
+  * and the lineage itself would become the bottleneck.
   *
   * Cycles: a cycle never reaches a root, so `maxRounds` bounds the loop;
   * leftover unresolved nodes surface with `root = null` rather than
@@ -32,25 +34,22 @@ object Hierarchy {
       maxRounds: Int = 40): DataFrame = {
     val roots = edges.filter(col(parentCol).isNull)
       .select(col(nodeCol).as("__r")).distinct()
-    var state = edges.select(col(nodeCol).as("node"),
-      coalesce(col(parentCol), col(nodeCol)).as("anc"),
-      when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"))
-      .localCheckpoint(true)
-    var rounds = 0
-    var unresolved =
+    def unresolved(state: DataFrame): Long =
       state.join(roots, state("anc") === roots("__r"), "left_anti").count()
-    while (unresolved > 0 && rounds < maxRounds) {
-      val hop = state.select(col("node").as("__hn"), col("anc").as("__ha"),
-        col("depth").as("__hd"))
-      val next = state.join(hop, state("anc") === hop("__hn"))
-        .select(col("node"), col("__ha").as("anc"),
-          (col("depth") + col("__hd")).as("depth"))
-        .localCheckpoint(true)
-      state = next
-      rounds += 1
-      unresolved =
-        state.join(roots, state("anc") === roots("__r"), "left_anti").count()
-    }
+    val state = Fixpoint.iterate(
+        edges.select(col(nodeCol).as("node"),
+          coalesce(col(parentCol), col(nodeCol)).as("anc"),
+          when(col(parentCol).isNull, 0L).otherwise(1L).as("depth")),
+        maxRounds) { g =>
+      if (unresolved(g.df) == 0) None
+      else {
+        val hop = g.df.select(col("node").as("__hn"), col("anc").as("__ha"),
+          col("depth").as("__hd"))
+        Some(g.df.join(hop, g.df("anc") === hop("__hn"))
+          .select(col("node"), col("__ha").as("anc"),
+            (col("depth") + col("__hd")).as("depth")))
+      }
+    }((_, _) => false).last.df
     state.join(roots, state("anc") === roots("__r"), "left")
       .select(col("node"),
         when(col("__r").isNotNull, col("anc")).as("root"),

@@ -65,18 +65,19 @@ object Hits {
     val nNodes = hub.count()
     var auth: DataFrame = null
     var i = 0
+    // hand-rolled: two interleaved generations (hub, auth) per round
     while (i < iters) {
       val nextAuth = halfStep(e, hub, "src", "dst", "hub", "auth", nNodes)
         .localCheckpoint()
-      if (auth != null) graft.core.Checkpoints.releaseLocal(auth)
+      if (auth != null) graft.core.Fixpoint.releaseLocal(auth)
       auth = nextAuth
       val nextHub = halfStep(e, auth, "dst", "src", "auth", "hub", nNodes)
         .localCheckpoint()
-      graft.core.Checkpoints.releaseLocal(hub)
+      graft.core.Fixpoint.releaseLocal(hub)
       hub = nextHub
       i += 1
     }
-    hub.join(graft.core.Checkpoints.broadcastSmall(auth, nNodes),
+    hub.join(graft.core.Fixpoint.broadcastSmall(auth, nNodes),
         Seq("node"))
       .select(col("node"), col("hub"), col("auth"))
   }
@@ -88,7 +89,7 @@ object Hits {
   private def halfStep(e: DataFrame, in: DataFrame, fromCol: String,
       toCol: String, inName: String, outName: String,
       nNodes: Long): DataFrame = {
-    import graft.core.Checkpoints.broadcastSmall
+    import graft.core.Fixpoint.broadcastSmall
     val fp = PageRank.FpScale
     // per-node totals sum as DECIMAL(38,0), not BIGINT: with hub ≡ 1 the
     // round-1 auth total is in_degree·2^48 (unnormalized — PageRank's

@@ -100,6 +100,7 @@ object KCore {
     var done = false
     def liveEdges: DataFrame =
       badFrames.foldLeft(cur)((e, b) => removeNodes(e, b))
+    // hand-rolled: the edge frame is compacted on its own schedule
     while (!done && iter < maxIter) {
       val bad = deg.filter(col("d") < k).select(col("node").as("u"))
       if (bad.isEmpty) {
@@ -125,8 +126,8 @@ object KCore {
         badFrames = bad :: badFrames
         if (badFrames.size >= CompactEvery) {
           val nextCur = liveEdges.localCheckpoint()
-          graft.core.Checkpoints.releaseLocal(cur)
-          spent.foreach(graft.core.Checkpoints.releaseLocal)
+          graft.core.Fixpoint.releaseLocal(cur)
+          spent.foreach(graft.core.Fixpoint.releaseLocal)
           spent = Nil
           badFrames = Nil
           cur = nextCur
@@ -134,7 +135,7 @@ object KCore {
         iter += 1
       }
     }
-    spent.foreach(graft.core.Checkpoints.releaseLocal)
+    spent.foreach(graft.core.Fixpoint.releaseLocal)
     // deg IS (node, degree) of the surviving subgraph — maintained
     // exactly, so no closing edge scan is needed.
     deg.select(col("node"), col("d").as("degree"))
@@ -169,15 +170,16 @@ object KCore {
       // peel to the k-core
       var iter = 0
       var done = false
+      // hand-rolled: each round's `bad` step-scratch frame is released
       while (!done && iter < maxIter) {
         val bad = badNodes(cur, k).localCheckpoint()
         if (bad.isEmpty) {
-          graft.core.Checkpoints.releaseLocal(bad)
+          graft.core.Fixpoint.releaseLocal(bad)
           done = true
         } else {
           val next = removeNodes(cur, bad).localCheckpoint()
-          graft.core.Checkpoints.releaseLocal(bad)
-          graft.core.Checkpoints.releaseLocal(cur)
+          graft.core.Fixpoint.releaseLocal(bad)
+          graft.core.Fixpoint.releaseLocal(cur)
           cur = next
           iter += 1
         }
@@ -185,7 +187,7 @@ object KCore {
       val peeled = before.join(nodesOf(cur), Seq("u"), "left_anti")
         .select(col("u").as("node"), lit((k - 1).toLong).as("coreness"))
         .localCheckpoint()
-      graft.core.Checkpoints.releaseLocal(before)
+      graft.core.Fixpoint.releaseLocal(before)
       layers = peeled :: layers
       k += 1
     }

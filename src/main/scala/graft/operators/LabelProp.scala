@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+
 /** Community detection by synchronous label propagation (Raghavan,
   * Albert & Kumara 2007), made DETERMINISTIC: every node starts
   * labelled with itself, and each round every node simultaneously
@@ -17,9 +19,10 @@ import org.apache.spark.sql.functions._
   * (src, label) count, and a per-src argmax folded into ONE aggregate —
   * `min(struct(-count, label))` — so a round is two keyed exchanges and
   * zero windows. Nodes with no in-edges keep their label via a final
-  * left join. The frame is localCheckpoint'd per round (the [[KCore]]
-  * pattern) so the plan doesn't grow with rounds. At 100 TB: labels and
-  * edges both hash-partition on node; rounds reuse that partitioning.
+  * left join. The frame is localCheckpoint'd per round
+  * ([[graft.core.Fixpoint]]) so the plan doesn't grow with rounds. At
+  * 100 TB: labels and edges both hash-partition on node; rounds reuse
+  * that partitioning.
   *
   * Callers wanting undirected semantics pass both orientations.
   */
@@ -34,7 +37,7 @@ object LabelProp {
     * join that exchanges the EDGE side every round (guide §3.1). */
   private[operators] def round(edges: DataFrame, labels: DataFrame,
       nNodes: Long = -1L): DataFrame = {
-    import graft.core.Checkpoints.broadcastSmall
+    import Fixpoint.broadcastSmall
     val upd = edges
       .join(broadcastSmall(labels.withColumnRenamed("node", "dst"), nNodes),
         Seq("dst"))
@@ -70,27 +73,22 @@ object LabelProp {
     // side is too big to broadcast, lets the per-round sort-merge join
     // reuse the cached partitioning instead of re-exchanging the edge
     // frame (the ShortestPaths.fromSources treatment, guide §2.4).
-    val nPart = edges.sparkSession
-      .conf.get("spark.sql.shuffle.partitions").toInt
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .repartition(nPart, col("dst"))
+      .repartition(Fixpoint.shufflePartitions(edges.sparkSession),
+        col("dst"))
       .persist()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    // one count over the checkpointed blocks: every label generation is
+    // one count over the checkpointed init: every label generation is
     // exactly node-sized, so this single measurement licenses the
-    // broadcast-on-small round joins (Checkpoints.broadcastSmall)
-    val nNodes = labels.count()
-    var i = 0
-    while (i < rounds) {
-      val next = round(e, labels, nNodes).localCheckpoint()
-      graft.core.Checkpoints.releaseLocal(labels)
-      labels = next
-      i += 1
-    }
+    // broadcast-on-small round joins (Fixpoint.broadcastSmall)
+    var nNodes = -1L
+    val labels = Fixpoint.iterate(
+        nodes.select(col("node"), col("node").as("label")), rounds) { g =>
+      if (g.round == 0) nNodes = g.rows
+      Some(round(e, g.df, nNodes))
+    }((_, _) => false).last.df
     e.unpersist(blocking = false)
     labels
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+
 /** Damped PageRank by relational power iteration — link-graph centrality
   * for corpus curation (rank web documents by the crawl's own link
   * structure, or rank documents inside a similarity graph built from the
@@ -34,9 +36,9 @@ import org.apache.spark.sql.functions._
   * Shape at scale: per round, one shuffle join of edges against the
   * rank table on src and one dst-keyed aggregation — the standard
   * join-agg PageRank; the rank/degree table is node-sized, edges are
-  * never widened. Each generation is localCheckpoint'd and its
-  * predecessor's blocks released ([[graft.core.Checkpoints]]), so
-  * lineage stays one round deep at any iteration count.
+  * never widened. The rounds run through [[graft.core.Fixpoint]]: each
+  * generation is localCheckpoint'd and its predecessor's blocks
+  * released, so lineage stays one round deep at any iteration count.
   */
 object PageRank {
 
@@ -102,29 +104,21 @@ object PageRank {
       case Some(s) =>
         when(col("node").isin(s: _*), lit(1.0)).otherwise(lit(0.0))
     }
-    var rank = nodes
+    val rank = nodes
       .join(deg, nodes("node") === deg("src"), "left")
       .select(col("node"), init.as("rank"), col("outdeg"))
-      .localCheckpoint()
-    var i = 0
-    var converged = false
-    while (i < iters && !converged) {
-      val next = step(e, rank, damping, seeds)
-        .localCheckpoint() // eager: materialized before the release below
-      // the L1 delta reads two ALREADY-CHECKPOINTED node-sized tables —
-      // no recomputation, one co-partitioned join + scalar aggregate
-      converged = tolerance.exists { tol =>
-        val prev = rank.select(col("node").as("__pn"),
-          col("rank").as("__prev"))
-        next.join(prev, col("node") === col("__pn"))
-          .agg(sum(abs(col("rank") - col("__prev"))).as("l1"))
-          .head().getDouble(0) < tol
-      }
-      graft.core.Checkpoints.releaseLocal(rank)
-      rank = next
-      i += 1
-    }
-    rank.select(col("node"), col("rank"))
+    Fixpoint.iterate(rank, iters)(g => Some(step(e, g.df, damping, seeds))) {
+      (prev, next) =>
+        // the L1 delta reads two ALREADY-CHECKPOINTED node-sized tables —
+        // no recomputation, one co-partitioned join + scalar aggregate
+        tolerance.exists { tol =>
+          val p = prev.df.select(col("node").as("__pn"),
+            col("rank").as("__prev"))
+          next.df.join(p, col("node") === col("__pn"))
+            .agg(sum(abs(col("rank") - col("__prev"))).as("l1"))
+            .head().getDouble(0) < tol
+        }
+    }.last.df.select(col("node"), col("rank"))
   }
 
   /** 2^48 — the fixed-point scale shared with the SQL oracle. */

@@ -181,6 +181,7 @@ object Privacy {
     }
     var round = 0
     var splitting = true
+    // hand-rolled: each round's `accepted` scratch frame is released
     while (splitting && round < maxRounds) {
       val stats = work.groupBy(col("pid")).agg(
         count(lit(1)).as("n"),
@@ -224,7 +225,7 @@ object Privacy {
       val accepted = cand.join(broadcast(halves), Seq("pid"))
         .localCheckpoint() // tiny; eager so isEmpty + the join share it
       if (accepted.isEmpty) {
-        graft.core.Checkpoints.releaseLocal(accepted)
+        graft.core.Fixpoint.releaseLocal(accepted)
         splitting = false
       } else {
         val next = work.join(broadcast(accepted), Seq("pid"), "left")
@@ -233,8 +234,8 @@ object Privacy {
               .otherwise(col("pid") * 2L + lit(1L) + sideOf.cast("long")))
           .drop("dim", "mid")
           .localCheckpoint()
-        graft.core.Checkpoints.releaseLocal(accepted)
-        graft.core.Checkpoints.releaseLocal(work)
+        graft.core.Fixpoint.releaseLocal(accepted)
+        graft.core.Fixpoint.releaseLocal(work)
         work = next
         round += 1
       }

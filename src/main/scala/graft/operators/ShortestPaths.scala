@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+
 /** Single-source BFS shortest paths (unweighted hop distance) — the
   * reachability/centrality primitive behind "how far is every entity
   * from this root" questions (account-takeover blast radius, referral
@@ -15,7 +17,7 @@ import org.apache.spark.sql.functions._
   * distance table — never a path enumeration, so dense graphs cost
   * O(edges × diameter), not O(paths). Each generation is eagerly
   * localCheckpoint'd and its predecessor released
-  * ([[graft.core.Checkpoints]]); the driver's only per-round action is
+  * ([[graft.core.Fixpoint]]); the driver's only per-round action is
   * the frontier-empty probe (`isEmpty` on a node-sized frame), the same
   * fixpoint pattern as [[PageRank]] / ConnectedComponents.
   *
@@ -37,12 +39,10 @@ object ShortestPaths {
     // materialize the edge projection ONCE: without this, an edge table
     // derived from upstream joins (the common case) re-executes its
     // whole lineage on every frontier round — measured 4x the operator's
-    // cost on the bipartite bench graph
-    // materialized ONCE: an edge table derived from upstream joins (the
-    // common case) would otherwise re-execute its whole lineage on every
-    // frontier round. (A src-hash pre-partition was tried and reverted:
-    // checkpoint loses the partitioning for join reuse, so it only added
-    // a shuffle; per-round the edge side rides AQE like any other join.)
+    // cost on the bipartite bench graph. (A src-hash pre-partition was
+    // tried and reverted: checkpoint loses the partitioning for join
+    // reuse, so it only added a shuffle; per-round the edge side rides
+    // AQE like any other join.)
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .localCheckpoint()
     // one checkpointed frame PER HOP, unioned lazily: the accumulated
@@ -56,7 +56,8 @@ object ShortestPaths {
     // union of all prior layers it replaces rescanned every earlier
     // layer each round, O(D²) on deep (chain/road-network) graphs.
     // The superseded generation's blocks release immediately.
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nPart = Fixpoint.shufflePartitions(spark)
+    // Hand-rolled, not Fixpoint.frontier: that driver pins small frames.
     // (pin-on-small was tried here and REVERTED: the single-source
     // loop's frames have no fan-out-probe consumer — the backward-
     // phase/broadcast-probe shape that makes the pin pay in
@@ -86,17 +87,17 @@ object ShortestPaths {
         val prev = seen
         seen = prev.unionByName(next.select("node"))
           .coalesce(nPart).localCheckpoint()
-        graft.core.Checkpoints.releaseLocal(prev)
+        Fixpoint.releaseLocal(prev)
       } else {
         // the terminal empty generation is still a checkpointed RDD —
         // release it too (the release-eagerly discipline)
-        graft.core.Checkpoints.releaseLocal(next)
+        Fixpoint.releaseLocal(next)
       }
       done = exhausted || hop >= maxHops
     }
     val out = frames.reduce(_ unionByName _)
-    graft.core.Checkpoints.releaseLocal(e)
-    graft.core.Checkpoints.releaseLocal(seen)
+    Fixpoint.releaseLocal(e)
+    Fixpoint.releaseLocal(seen)
     out
   }
 
@@ -121,62 +122,22 @@ object ShortestPaths {
     val seed = sources
       .select(col(sourceCol).as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    // running (seed, node) `seen` frame, re-checkpointed per hop — one
-    // anti-join input per round, O(D) cumulative frame scans instead of
-    // the O(D²) lazy re-union of all prior layers (see fromSource)
-    val nPart = edges.sparkSession
-      .conf.get("spark.sql.shuffle.partitions").toInt
-    import graft.core.Checkpoints.{pinSmall, PinMaxRows}
-    // counts: convergence probe + pin-on-small size signal (fromSource)
-    val seedRows = seed.count()
-    var seen = pinSmall(seed.select("seed", "node"), seedRows,
-      Seq("seed", "node")).localCheckpoint()
-    var seenRows = seedRows
-    var lastRows = seedRows
-    var frames = List(seed)
-    var frontier = seed
-    var hop = 0
-    var done = maxHops == 0
-    while (!done) {
-      // agg before anti (see fromSource): dedupe the in-degree fan-out
-      // map-side before anything shuffles; the anti join filters whole
-      // (seed, node) groups, so the order swap cannot change the
-      // result. Pinned `seen` => no seen-side shuffle in the anti join.
-      val next = pinSmall(
+    val bfs = Fixpoint.frontier(seed, Seq("seed", "node"), maxHops) {
+      (frontier, seen) =>
+        // agg before anti (see fromSource): dedupe the in-degree fan-out
+        // map-side before anything shuffles; the anti join filters whole
+        // (seed, node) groups, so the order swap cannot change the
+        // result. Pinned `seen` => no seen-side shuffle in the anti join.
         frontier.join(e, col("node") === col("__src"))
           .select(col("seed"), col("__dst").as("node"),
             (col("dist") + 1L).as("dist"))
           .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
-          .join(seen, Seq("seed", "node"), "left_anti"),
-        lastRows, Seq("seed", "node"))
-        .localCheckpoint()
-      hop += 1
-      val cnt = next.count()
-      val exhausted = cnt == 0
-      if (!exhausted) {
-        frames = next :: frames
-        frontier = next
-        lastRows = cnt
-        seenRows += cnt
-        val prev = seen
-        val grown = prev.unionByName(next.select("seed", "node"))
-        seen = (if (seenRows <= PinMaxRows)
-            pinSmall(grown, seenRows, Seq("seed", "node"))
-          else grown.coalesce(nPart)).localCheckpoint()
-        graft.core.Checkpoints.releaseLocal(prev)
-      } else {
-        // release the terminal empty generation's checkpoint blocks
-        graft.core.Checkpoints.releaseLocal(next)
-      }
-      done = exhausted || hop >= maxHops
+          .join(seen, Seq("seed", "node"), "left_anti")
     }
-    // every frame is already an eager checkpoint — the union never
+    // every layer is already an eager checkpoint — the union never
     // re-reads e, so the cache can drop immediately
-    val out = frames.reduce(_ unionByName _)
     e.unpersist(blocking = false)
-    graft.core.Checkpoints.releaseLocal(seen)
-    out
+    bfs.layers.reverseIterator.map(_.df).reduce(_ unionByName _)
   }
 
   /** Landmark harmonic closeness (Boldi & Vigna 2014's centrality

@@ -32,7 +32,7 @@ object Triangles {
     * ≤8M-node degree table (tens of MB hashed) and a ~5 MB Bloom — both
     * comfortably broadcastable; above it the plan falls back to the
     * shuffle form that scales to arbitrary graphs. */
-  private val SmallEdgeMaxRows: Long = graft.core.Checkpoints.PinMaxRows
+  private val SmallEdgeMaxRows: Long = graft.core.Fixpoint.PinMaxRows
 
   /** @param edges undirected edge list (self-loops and duplicates fine —
     *               canonicalized away); endpoints any orderable type.
@@ -57,7 +57,7 @@ object Triangles {
     // one count over the retained blocks: the size signal for the
     // degree-broadcast and wedge-Bloom branches (and the Bloom's
     // expectedNumItems) — the same known-small discipline as
-    // Checkpoints.pinSmall, decided from the measured count, never from
+    // Fixpoint.pinSmall, decided from the measured count, never from
     // catalyst estimates (the cached distinct carries none)
     val undCount = und.count()
     val small = undCount <= SmallEdgeMaxRows
@@ -100,7 +100,7 @@ object Triangles {
     // cache keeps HashPartitioning(src, n), so both wedge legs read it
     // exchange-free.
     val oriented = scope.retain(oriented0.repartition(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src")))
+      graft.core.Fixpoint.shufflePartitions(spark), col("src")))
 
     // Wedges at each oriented source; id order on (d1, d2) dedups the
     // unordered neighbor pair.

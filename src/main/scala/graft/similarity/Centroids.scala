@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, Fixpoint}
 
 /** Per-group embedding centroids as relational aggregation — the building
   * block for IVF (re)training: a k-means iteration is `ivfAssign` (assign
@@ -123,15 +123,10 @@ object Centroids {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val normed = scope.retain(
       CosineSearch.withNormSq(vecs.select(col(idCol), col(vecCol)), vecCol))
-    var cents = kmeansInit(normed, idCol, vecCol, k, seed, centroidIdCol)
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      val next = kmeansStep(normed, cents, idCol, vecCol, centroidIdCol)
-        .localCheckpoint() // eager: materialized before the release below
-      graft.core.Checkpoints.releaseLocal(cents)
-      cents = next
-    }
-    cents
+    Fixpoint.iterate(
+        kmeansInit(normed, idCol, vecCol, k, seed, centroidIdCol), iters) {
+      g => Some(kmeansStep(normed, g.df, idCol, vecCol, centroidIdCol))
+    }((_, _) => false).last.df
   }
 
   /** Mean cosine of every vector to its assigned centroid — the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, Fixpoint}
 import graft.functions.FloatDotExpr
 
 /** Product quantization (PQ) with asymmetric-distance (ADC) search — the
@@ -157,15 +157,10 @@ object ProductQuantizer {
       scope: CacheScope = CacheScope.session): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val v = scope.retain(vecs.select(col(idCol), col(vecCol)))
-    var cb = initCodebooks(v, idCol, vecCol, dims, m, ksub, seed)
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      val next = pqStep(v, idCol, vecCol, cb, dims, m)
-        .localCheckpoint() // eager: materialized before the release below
-      graft.core.Checkpoints.releaseLocal(cb)
-      cb = next
-    }
-    cb
+    Fixpoint.iterate(
+        initCodebooks(v, idCol, vecCol, dims, m, ksub, seed), iters) {
+      g => Some(pqStep(v, idCol, vecCol, g.df, dims, m))
+    }((_, _) => false).last.df
   }
 
   /** One ENGINE-EXACT Lloyd round: [[encodeExact]] assignment (decimal
@@ -232,15 +227,10 @@ object ProductQuantizer {
       scope: CacheScope = CacheScope.session): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val v = scope.retain(vecs.select(col(idCol), col(vecCol)))
-    var cb = initCodebooks(v, idCol, vecCol, dims, m, ksub, seed)
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      val next = pqStepExact(v, idCol, vecCol, cb, dims, m)
-        .localCheckpoint() // eager: materialized before the release below
-      graft.core.Checkpoints.releaseLocal(cb)
-      cb = next
-    }
-    cb
+    Fixpoint.iterate(
+        initCodebooks(v, idCol, vecCol, dims, m, ksub, seed), iters) {
+      g => Some(pqStepExact(v, idCol, vecCol, g.df, dims, m))
+    }((_, _) => false).last.df
   }
 
   /** Mean L2 quantization surrogate over the corpus:

@@ -1,10 +1,6 @@
 package graft.core
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 
@@ -201,30 +197,12 @@ class DeletesSpec extends SparkSpec {
     Snapshots.commit(Seq((4L, "d")).toDF("k", "s"), dir)              // v4
     Deletes.commitUpsert(spark, dir,
       Seq((1L, "a2")).toDF("k", "s"), Seq("k"))                     // v5
-    // count only this thread's jobs, by job group
-    val group = s"resolve-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+    val (merged, jobs) = countJobs {
+      (1L to 5L).foreach(v => Snapshots.read(spark, dir, Some(v)))
+      Snapshots.read(spark, dir)
+      Deletes.readMerged(spark, dir)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "version resolution")
-    val merged =
-      try {
-        (1L to 5L).foreach(v => Snapshots.read(spark, dir, Some(v)))
-        Snapshots.read(spark, dir)
-        val m = Deletes.readMerged(spark, dir)
-        GraftBus.drain(sc)
-        m
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    assert(jobs.get === 0)
+    assert(jobs === 0)
     assert(rows(merged) === Set((1L, "a2"), (3L, "c"), (4L, "d")))
   }
 

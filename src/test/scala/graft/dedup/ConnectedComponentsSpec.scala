@@ -137,4 +137,15 @@ class ConnectedComponentsSpec extends SparkSpec {
       edges("a" -> "b", "b" -> "c"), "doc_a", "doc_b").count()
     assert(cm.isEmpty)
   }
+
+  test("labelsPropagation releases every generation but the last") {
+    // a six-hop chain takes seven propagation rounds
+    val chain = (0 until 6).map(i => s"n$i" -> s"n${i + 1}")
+    val (out, left) = leftPersisted(ConnectedComponents.labelsPropagation(
+      edges(chain: _*), "doc_a", "doc_b"))
+    assert(checkpointsRead(out).size === 1)
+    assert(left.subsetOf(checkpointsRead(out)))
+    assert(out.select("cluster_id").distinct().collect().map(_.getString(0))
+      .toSeq === Seq("n0"))
+  }
 }

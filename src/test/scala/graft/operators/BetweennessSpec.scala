@@ -63,4 +63,20 @@ class BetweennessSpec extends SparkSpec {
     val b = run(edges.repartition(7), Seq("n0", "n1"))
     assert(a === b)
   }
+
+  test("forward layers and deltas(0) are released; only the output's deltas stay") {
+    val path = undirected(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"))
+    val (out, left) = leftPersisted(Betweenness.sampled(
+      path, "src", "dst", Seq("a").toDF("s"), "s", 6))
+    // depth 4: the output reads deltas(1..4)
+    assert(checkpointsRead(out).size === 4)
+    assert(left.subsetOf(checkpointsRead(out)))
+    assert(out.count() === 3L)
+    // a seed without out-edges (depth 0): the output reads the seed layer
+    val (empty, leftEmpty) = leftPersisted(Betweenness.sampled(
+      path, "src", "dst", Seq("z").toDF("s"), "s", 6))
+    assert(checkpointsRead(empty).size === 1)
+    assert(leftEmpty.subsetOf(checkpointsRead(empty)))
+    assert(empty.count() === 0L)
+  }
 }

@@ -48,4 +48,14 @@ class HierarchySpec extends SparkSpec {
     assert(out(2L) == ((None, None)))
     assert(out(4L) == ((Some(3L), Some(1L))))
   }
+
+  test("superseded generations are released: only the last outlives the call") {
+    // depth 20 takes five doubling rounds
+    val rows = (1L to 20L).map(i => i -> (if (i == 1) None else Some(i - 1)))
+    val (out, left) = leftPersisted(Hierarchy.resolveRoots(
+      rows.toDF("node", "parent"), "node", "parent"))
+    assert(checkpointsRead(out).size === 1)
+    assert(left.subsetOf(checkpointsRead(out)))
+    assert(out.filter($"root" === 1L).count() === 20L)
+  }
 }
