@@ -76,30 +76,11 @@ object BloomIndex {
         "never filter")
   }
 
-  /** Current data-file set of a parquet dir — the staleness
-    * fingerprint: the index is keyed per file, so any compaction,
-    * recluster, or append changes this set and invalidates the index. */
-  private def currentFiles(spark: SparkSession, tableDir: String): Set[String] = {
-    val fs = OwnDirs.fileSystem(spark, tableDir)
-    fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toUri.getPath).toSet
-  }
-
-  /** Fail-loud staleness check: the index's file set must be EXACTLY
-    * the table's current listing. A superset means files were deleted
-    * (lookups would read missing paths); a subset means files were
-    * added (lookups would silently MISS rows — the dangerous case). */
-  def validate(spark: SparkSession, index: DataFrame, tableDir: String): Unit = {
-    val indexed = index.select(col("file")).collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-    val current = currentFiles(spark, tableDir)
-    require(indexed == current,
-      s"BloomIndex is stale for $tableDir: " +
-        s"${(current -- indexed).size} unindexed file(s), " +
-        s"${(indexed -- current).size} vanished file(s) — rebuild after " +
-        "compaction/recluster/append")
-  }
+  /** Fail-loud staleness check ([[OwnDirs.requireCurrent]]): the index
+    * is keyed per file, so any compaction, recluster or append since
+    * [[build]] fails it. */
+  def validate(spark: SparkSession, index: DataFrame, tableDir: String): Unit =
+    OwnDirs.requireCurrent(spark, "BloomIndex", index, tableDir)
 
   /** [[lookup]] with the staleness gate: validates the index against
     * the table's current file listing first, so a lookup through an
@@ -145,11 +126,9 @@ object BloomIndex {
     * RELATIVE (basenames) so the staged-dir build survives the
     * staging→`v=N` rename. */
   def commitIndexed(df: DataFrame, tableDir: String, keyCol: String,
-      expectedItemsPerFile: Long, fpp: Double = 0.01): Long = {
-    requireIntegralKey(df, keyCol)
+      expectedItemsPerFile: Long, fpp: Double = 0.01): Long =
     Snapshots.commitWith(df, tableDir, stageIndex(df, keyCol,
       expectedItemsPerFile, fpp))
-  }
 
   /** [[commitIndexed]] with [[Snapshots.commitTagged]]'s idempotency
     * contract: when a COMMITTED version already carries `tag`, nothing
@@ -161,24 +140,19 @@ object BloomIndex {
     * when the version is. */
   def commitIndexedTagged(df: DataFrame, tableDir: String, tag: String,
       keyCol: String, expectedItemsPerFile: Long,
-      fpp: Double = 0.01, carryTags: Seq[String] = Nil): Option[Long] = {
-    requireIntegralKey(df, keyCol)
-    Snapshots.commitTaggedWith(df, tableDir, tag, (fs, staging) => {
-      // carried tags (e.g. the batch tags a squash subsumes) share the
-      // version's atomicity like the primary tag; only the primary tag
-      // gates the idempotency check
-      carryTags.foreach(t => fs.create(
-        new org.apache.hadoop.fs.Path(staging, s"_tag-$t"), true).close())
-      stageIndex(df, keyCol, expectedItemsPerFile, fpp)(fs, staging)
-    })
-  }
+      fpp: Double = 0.01): Option[Long] =
+    Snapshots.commitTaggedWith(df, tableDir, tag, stageIndex(df, keyCol,
+      expectedItemsPerFile, fpp))
 
-  /** The staged-dir index writer shared by both commit forms: build the
-    * per-file index over the staging dir (basenames survive the
-    * staging→`v=N` rename) and write it to `_bloom/`. */
-  private def stageIndex(df: DataFrame, keyCol: String,
+  /** The staged-dir index writer shared by every indexed commit (both
+    * commit forms and [[Compaction.squashVersions]]): checks the key is
+    * integral when called, then builds the per-file index over the
+    * staging dir (basenames survive the staging→`v=N` rename) and
+    * writes it to `_bloom/`. */
+  private[core] def stageIndex(df: DataFrame, keyCol: String,
       expectedItemsPerFile: Long, fpp: Double)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) => Unit =
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) => Unit = {
+    requireIntegralKey(df, keyCol)
     (_, staging) => {
       val spark = df.sparkSession
       val agg = udaf(new BuildAgg(expectedItemsPerFile, fpp))
@@ -190,6 +164,7 @@ object BloomIndex {
         .agg(count(lit(1)).as("n_rows"), agg(col("k")).as("bloom"))
       idx.write.mode("error").parquet(s"$staging/_bloom")
     }
+  }
 
   /** The Bloom index of a committed version (latest when None).
     *
@@ -201,7 +176,7 @@ object BloomIndex {
     */
   def forVersion(spark: SparkSession, tableDir: String,
       version: Option[Long] = None): DataFrame = {
-    val dir = versionDir(spark, tableDir, version)
+    val dir = Snapshots.committedDir(spark, tableDir, version)
     OwnDirs.readParquet(spark, s"$dir/_bloom")
       .withColumn("file", concat(lit(s"$dir/"), col("file")))
   }
@@ -214,16 +189,6 @@ object BloomIndex {
       keys: Seq[Long], version: Option[Long] = None): DataFrame =
     lookup(spark, forVersion(spark, tableDir, version), keyCol, keys)
 
-  private def versionDir(spark: SparkSession, tableDir: String,
-      version: Option[Long]): String = {
-    val vs = Snapshots.versions(spark, tableDir)
-    require(vs.nonEmpty, s"no committed versions at $tableDir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v),
-      s"version $v not committed at $tableDir (have ${vs.mkString(",")})")
-    s"$tableDir/v=$v"
-  }
-
   // ------------------------------------------------------------- lookups
 
   /** Point lookup through the index: read only candidate files, then
@@ -232,19 +197,7 @@ object BloomIndex {
     * match the table — use [[lookupChecked]] when appends/compactions
     * may have happened since [[build]]. */
   def lookup(spark: SparkSession, index: DataFrame, keyCol: String,
-      keys: Seq[Long]): DataFrame = {
-    val files = candidateFiles(index, keys)
-    if (files.isEmpty) {
-      // no file can contain the keys: empty frame with the right schema
-      // (cheapest source of truth: scan the index's first file's schema
-      // would still read a footer — an impossible filter on one file is
-      // simpler and prunes to zero row groups)
-      val any = index.select(col("file")).limit(1).collect()
-      require(any.nonEmpty, "empty index")
-      spark.read.parquet(any.head.getString(0)).filter(lit(false))
-    } else {
-      spark.read.parquet(files: _*)
-        .filter(col(keyCol).isin(keys: _*))
-    }
-  }
+      keys: Seq[Long]): DataFrame =
+    OwnDirs.readCandidates(spark, index, candidateFiles(index, keys),
+      col(keyCol).isin(keys: _*))
 }

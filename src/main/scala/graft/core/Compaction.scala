@@ -1,8 +1,7 @@
 package graft.core
 
-import org.apache.hadoop.fs.{Path => HPath}
-
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{max, min}
 
 /** Small-file compaction for parquet directories — the maintenance pass
   * every incremental pipeline needs: appends and per-batch state
@@ -22,18 +21,8 @@ import org.apache.spark.sql.SparkSession
 object Compaction {
 
   def compact(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Long, Int) = {
-    require(targetBytes > 0, s"bad targetBytes=$targetBytes")
-    val fs = OwnDirs.fileSystem(spark, dir)
-    def dataFiles() = fs.listStatus(new HPath(dir))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = dataFiles()
-    val bytes = before.map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = AtomicParquet.read(spark, dir).repartition(nOut)
-    AtomicParquet.overwrite(df, dir)
-    (before.length, bytes, dataFiles().length)
-  }
+      targetBytes: Long = 128L * 1024 * 1024): (Int, Long, Int) =
+    rewrite(spark, dir, targetBytes)(_.repartition(_))
 
   /** Compaction + z-order reclustering in ONE atomic rewrite: size the
     * output from the listing like [[compact]], but range-partition and
@@ -47,29 +36,33 @@ object Compaction {
   def recluster(spark: SparkSession, dir: String,
       colA: String, boundsA: (Double, Double),
       colB: String, boundsB: (Double, Double),
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Long, Int) = {
+      targetBytes: Long = 128L * 1024 * 1024): (Int, Long, Int) =
+    rewrite(spark, dir, targetBytes)((df, nOut) =>
+      ZOrder.layout(df, colA, boundsA, colB, boundsB, partitions = nOut))
+
+  /** The atomic rewrite both passes share: `layout` gets the directory's
+    * contents and the output file count sized from its listing. */
+  private def rewrite(spark: SparkSession, dir: String, targetBytes: Long)(
+      layout: (DataFrame, Int) => DataFrame): (Int, Long, Int) = {
     require(targetBytes > 0, s"bad targetBytes=$targetBytes")
     val fs = OwnDirs.fileSystem(spark, dir)
-    def dataFiles() = fs.listStatus(new HPath(dir))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = dataFiles()
+    val before = OwnDirs.dataFiles(fs, dir)
     val bytes = before.map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = ZOrder.layout(AtomicParquet.read(spark, dir),
-      colA, boundsA, colB, boundsB, partitions = nOut)
-    AtomicParquet.overwrite(df, dir)
-    (before.length, bytes, dataFiles().length)
+    AtomicParquet.overwrite(layout(AtomicParquet.read(spark, dir),
+      OwnDirs.outputFiles(bytes, targetBytes)), dir)
+    (before.length, bytes, OwnDirs.dataFiles(fs, dir).length)
   }
 
   /** Maintenance pass for a [[Snapshots]] table whose versions are
     * per-micro-batch deltas ([[graft.streaming.SnapshotSink]]): squash
-    * the union of all committed versions into ONE new version —
-    * compacted (output file count sized from the summed on-disk bytes),
-    * z-order reclustered on `(colA, colB)`, and Bloom-indexed on
-    * `keyCol` — then prune history to that version. After the squash,
-    * "the table" is its latest version: point lookups go through
-    * [[BloomIndex.lookupVersion]], and both clustering columns' per-file
-    * min-max envelopes are restored.
+    * the merged contents of all committed versions ([[Deletes.readMerged]],
+    * so merge-on-read deletes are folded in, not resurrected) into ONE
+    * new version — compacted (output file count sized from the summed
+    * on-disk bytes), z-order reclustered on `(colA, colB)`, and
+    * Bloom-indexed on `keyCol` — then prune history to that version.
+    * After the squash, "the table" is its latest version: point lookups
+    * go through [[BloomIndex.lookupVersion]], and both clustering
+    * columns' per-file min-max envelopes are restored.
     *
     * The squash version carries tag `squash-<n>` so a crashed-and-rerun
     * maintenance job is idempotent per input state (n = the latest
@@ -79,7 +72,7 @@ object Compaction {
     * (batch ids, prior squashes) are CARRIED into the squash version,
     * so a replay of any squashed batch id — even from a rewound
     * checkpoint older than the squash — still resolves its tag and is
-    * skipped.
+    * skipped (the skeleton [[Deletes.foldHistory]]).
     *
     * Returns the squash version number (None when the latest version is
     * already a squash of the current history). */
@@ -88,47 +81,15 @@ object Compaction {
       colA: String, colB: String,
       targetBytes: Long = 128L * 1024 * 1024): Option[Long] = {
     require(targetBytes > 0, s"bad targetBytes=$targetBytes")
-    val vs = Snapshots.versions(spark, tableDir)
-    require(vs.nonEmpty, s"no committed versions at $tableDir")
-    val tag = s"squash-${vs.max}"
-    if (Snapshots.taggedVersion(spark, tableDir, tag).isDefined) return None
-    val fs = OwnDirs.fileSystem(spark, tableDir)
-    // single-version history that IS a squash output: nothing to do
-    // (the crashed-rerun case is the tag check above; this catches the
-    // "maintenance fired twice with no new batches" case)
-    if (vs.size == 1 && Option(fs.globStatus(
-        new HPath(tableDir, s"v=${vs.max}/_tag-squash-*")))
-        .exists(_.nonEmpty)) return None
-    val bytes = vs.map { v =>
-      fs.listStatus(new HPath(tableDir, s"v=$v"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-    }.sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    // delete-aware: fold in any merge-on-read delete versions
-    // ([[Deletes]]) so the squash materializes them instead of
-    // resurrecting deleted rows
-    val union = Deletes.readMerged(spark, tableDir)
-    import org.apache.spark.sql.functions.{col, min, max}
-    def bounds(c: String): (Double, Double) = {
-      val r = union.agg(min(col(c)).cast("double"), max(col(c)).cast("double"))
-        .head()
-      (r.getDouble(0), r.getDouble(1))
+    Deletes.foldHistory(spark, tableDir, "squash") { (merged, bytes) =>
+      // both clustering columns' bounds in one aggregation job
+      val b = merged.agg(min(colA).cast("double"), max(colA).cast("double"),
+        min(colB).cast("double"), max(colB).cast("double")).head()
+      val clustered = ZOrder.layout(merged, colA, (b.getDouble(0), b.getDouble(1)),
+        colB, (b.getDouble(2), b.getDouble(3)),
+        partitions = OwnDirs.outputFiles(bytes, targetBytes))
+      (clustered, BloomIndex.stageIndex(clustered, keyCol,
+        expectedItemsPerFile, fpp = 0.01))
     }
-    val clustered = ZOrder.layout(union, colA, bounds(colA),
-      colB, bounds(colB), partitions = nOut)
-    // carry every subsumed tag (batch ids, prior squashes) into the
-    // squash version: a replay of ANY squashed batch id — however old
-    // the replay horizon — still resolves its tag and is skipped, so
-    // pruning history cannot break exactly-once
-    val carried = vs.flatMap { v =>
-      fs.listStatus(new HPath(tableDir, s"v=$v")).map(_.getPath.getName)
-        .filter(_.startsWith("_tag-")).map(_.stripPrefix("_tag-"))
-    }.distinct
-    val squashed = BloomIndex.commitIndexedTagged(clustered, tableDir, tag,
-      keyCol, expectedItemsPerFile, carryTags = carried)
-    // only after the squash version is committed does history collapse
-    squashed.foreach(_ => Snapshots.prune(spark, tableDir, keep = 1))
-    squashed
   }
 }

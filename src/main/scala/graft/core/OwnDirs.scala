@@ -4,13 +4,17 @@ import java.io.FileNotFoundException
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem access and parquet reads for the directories this package
@@ -23,6 +27,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * returns the schema Spark stored in the data files' footer, so
   * [[readParquet]] takes it from there instead:
   * one listing plus one footer read on the driver, and no Spark job.
+  * [[scan]] reads many such directories as one scan on their
+  * [[listings]].
   */
 private[core] object OwnDirs {
 
@@ -38,43 +44,134 @@ private[core] object OwnDirs {
   def fileSystem(spark: SparkSession, dir: String): FileSystem =
     new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** `spark.read.parquet(dir)` without the schema-inference job. Falls
-    * back to the plain read when the schema cannot be taken from a
-    * footer (no flat data file, a partitioned layout, or files from a
-    * writer other than Spark), so such directories read and fail
-    * exactly as before. */
+  /** `spark.read.parquet(dir)` without the schema-inference job, as one
+    * [[scan]] on `dir`'s [[listings]]. Falls back to the plain read when
+    * `dir` has no listing (missing, empty or a partitioned layout), so
+    * such directories read and fail exactly as before. */
   def readParquet(spark: SparkSession, dir: String): DataFrame =
-    footerSchema(spark, dir)
-      .fold(spark.read.parquet(dir))(s => spark.read.schema(s).parquet(dir))
+    listings(spark, Seq(dir)).headOption.fold(spark.read.parquet(dir))(l =>
+      scan(spark, Seq(l), allowMissingColumns = false))
 
-  /** The Spark schema stored in the footer of one data file of `dir`,
-    * when `dir` holds data files directly and no partition directories.
-    * Names Spark's file listing hides (`_x`, `.x`) are skipped. */
+  /** The Spark schema stored in the footer of one data file of `dir`. */
   def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
-    val path = new HPath(dir)
-    val listed =
-      try path.getFileSystem(conf).listStatus(path).toSeq
-      catch { case _: FileNotFoundException => Nil }
-    val visible = listed.filterNot { s =>
-      val n = s.getPath.getName
-      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
-    }
-    if (visible.exists(_.isDirectory)) None
-    else visible.find(_.isFile).flatMap { st =>
-      // an unreadable footer is left to the plain read to report
-      val json = Try {
-        val opts = HadoopReadOptions.builder(conf)
-          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
-        val reader =
-          ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), opts)
-        try reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(SparkSchemaKey)
-        finally reader.close()
-      }.toOption.flatMap(Option(_))
-      json.flatMap(j => Try(DataType.fromJson(j)).toOption.collect {
-        case s: StructType => s
-      })
-    }
+    visibleFiles(conf, dir).flatMap(fs => fileSchema(conf, fs.head))
   }
+
+  /** A directory listed once: its data files and their schema. */
+  final case class Listing(files: Seq[FileStatus], schema: StructType)
+
+  /** The [[Listing]] of each of `dirs` that has one: the schema is the
+    * one stored in the first file's footer, inferred by Spark (one job)
+    * when it has none. One Hadoop conf serves every dir. */
+  def listings(spark: SparkSession, dirs: Seq[String]): Seq[Listing] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dirs.flatMap(dir => visibleFiles(conf, dir).map(fs => Listing(fs,
+      fileSchema(conf, fs.head).getOrElse(spark.read.parquet(dir).schema))))
+  }
+
+  /** `dir`'s [[dataFiles]]; None when `dir` is missing, holds none, or
+    * holds directories Spark would read too (a partitioned layout). */
+  private def visibleFiles(conf: Configuration,
+      dir: String): Option[Seq[FileStatus]] = {
+    val path = new HPath(dir)
+    val visible =
+      try path.getFileSystem(conf).listStatus(path).toSeq
+        .filterNot(s => hidden(s.getPath.getName))
+      catch { case _: FileNotFoundException => Nil }
+    Option.when(visible.nonEmpty && !visible.exists(_.isDirectory))(visible)
+  }
+
+  /** Names Spark's file listing skips. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** The Spark schema stored in `file`'s footer; None when it has none
+    * or is unreadable (left to a plain read to report). */
+  private def fileSchema(conf: Configuration,
+      file: FileStatus): Option[StructType] = {
+    val json = Try {
+      val opts = HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+      val reader =
+        ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), opts)
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(SparkSchemaKey)
+      finally reader.close()
+    }.toOption.flatMap(Option(_))
+    json.flatMap(j => Try(DataType.fromJson(j)).toOption.collect {
+      case s: StructType => s
+    })
+  }
+
+  /** One parquet scan over the files of `listings`, with the schema
+    * `unionByName` of the separate reads would resolve (from empty
+    * frames, so no row is read): differing column sets fail with
+    * Spark's `AnalysisException` unless `allowMissingColumns`, which
+    * null-fills. Built on the listings, so Spark lists nothing again —
+    * `spark.read.parquet` lists more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths in a
+    * Spark job and warns about hidden root names such as `_deletes`.
+    * Each file is its own root: no partition column is discovered. */
+  def scan(spark: SparkSession, listings: Seq[Listing],
+      allowMissingColumns: Boolean): DataFrame = {
+    val schema = GraftShim.asNullable(listings.map(_.schema).distinct
+      .map(s => spark.createDataFrame(java.util.List.of[Row](), s))
+      .reduce(_.unionByName(_, allowMissingColumns)).schema)
+    val files = listings.flatMap(_.files)
+    val listed = files.map(f => f.getPath -> Array(f)).toMap
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
+      Some(schema), new FileStatusCache {
+        override def getLeafFiles(p: HPath): Option[Array[FileStatus]] =
+          listed.get(p)
+        def putLeafFiles(p: HPath, leafFiles: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
+      })
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      schema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** Fail-loud staleness gate of a per-file index (`kind`:
+    * [[BloomIndex]] or [[ZoneMap]]): the index's file set must be
+    * EXACTLY the data files now under `tableDir`. A superset means files
+    * were deleted (lookups would read missing paths); a subset means
+    * files were added (lookups would silently MISS rows). */
+  def requireCurrent(spark: SparkSession, kind: String, index: DataFrame,
+      tableDir: String): Unit = {
+    val indexed = index.select("file").collect()
+      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val current = dataFiles(fileSystem(spark, tableDir), tableDir)
+      .map(_.getPath.toUri.getPath).toSet
+    require(indexed == current,
+      s"$kind is stale for $tableDir: " +
+        s"${(current -- indexed).size} unindexed file(s), " +
+        s"${(indexed -- current).size} vanished file(s) — rebuild after " +
+        "compaction/recluster/append")
+  }
+
+  /** The rows of the candidate `files` a per-file index kept that match
+    * `keep`. When every file was pruned: an empty frame that still
+    * carries the table schema, read from one indexed file (the false
+    * filter prunes all its row groups, so only the footer is read). */
+  def readCandidates(spark: SparkSession, index: DataFrame,
+      files: Seq[String], keep: Column): DataFrame =
+    if (files.nonEmpty) spark.read.parquet(files: _*).filter(keep)
+    else {
+      val any = index.select("file").limit(1).collect()
+      require(any.nonEmpty, "empty index: no file to derive a schema from")
+      spark.read.parquet(any.head.getString(0)).filter(lit(false))
+    }
+
+  /** The data files directly under `dir`: the files a Spark read of
+    * `dir` reads, so no `_tag-*`, `_SUCCESS` or `.crc` file. */
+  def dataFiles(fs: FileSystem, dir: String): Seq[FileStatus] =
+    fs.listStatus(new HPath(dir)).toSeq.filter(isDataFile)
+
+  def isDataFile(s: FileStatus): Boolean =
+    s.isFile && !hidden(s.getPath.getName)
+
+  /** How many output files a rewrite of `bytes` writes at `targetBytes`
+    * per file: the ceiling, and at least one. */
+  def outputFiles(bytes: Long, targetBytes: Long): Int =
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -154,35 +154,47 @@ object Snapshots {
     * hook's artifacts share the version's atomicity. */
   private[graft] def commitTaggedWith(df: DataFrame, tableDir: String,
       tag: String, beforeClaim: (FileSystem, HPath) => Unit): Option[Long] = {
-    val spark = df.sparkSession
-    val fs = fileSystem(spark, tableDir)
-    if (taggedVersion(fs, tableDir, tag).isDefined) return None
+    if (taggedVersion(df.sparkSession, tableDir, tag).isDefined) return None
     Some(commitWith(df, tableDir, (f, data) => {
-      f.create(new HPath(data, s"_tag-$tag"), true).close()
+      writeTag(f, data, tag)
       beforeClaim(f, data)
     }))
   }
 
+  private val TagPrefix = "_tag-"
+
+  /** Stage `tag` into the data dir `dir` (before its claim). */
+  private[core] def writeTag(fs: FileSystem, dir: HPath, tag: String): Unit =
+    fs.create(new HPath(dir, s"$TagPrefix$tag"), true).close()
+
+  /** The tag a version dir entry named `name` is, if any. */
+  private[core] def tagOf(name: String): Option[String] =
+    Option.when(name.startsWith(TagPrefix))(name.stripPrefix(TagPrefix))
+
   /** The committed version carrying `tag`, if any. */
   def taggedVersion(spark: SparkSession, tableDir: String,
-      tag: String): Option[Long] =
-    taggedVersion(fileSystem(spark, tableDir), tableDir, tag)
-
-  private def taggedVersion(fs: FileSystem, tableDir: String,
-      tag: String): Option[Long] =
+      tag: String): Option[Long] = {
+    val fs = fileSystem(spark, tableDir)
     committedVersions(fs, tableDir).sorted.find(v =>
-      fs.exists(new HPath(tableDir, s"v=$v/_tag-$tag")))
+      fs.exists(new HPath(tableDir, s"v=$v/$TagPrefix$tag")))
+  }
 
   /** Read a specific committed version, or the latest when None. */
   def read(spark: SparkSession, tableDir: String,
-      version: Option[Long] = None): DataFrame = {
-    val fs = fileSystem(spark, tableDir)
-    val vs = committedVersions(fs, tableDir)
+      version: Option[Long] = None): DataFrame =
+    OwnDirs.readParquet(spark, committedDir(spark, tableDir, version))
+
+  /** The data dir of the committed version `version` names, or of the
+    * latest when None; fails when it is not committed (never committed,
+    * rolled back or pruned). Every per-version read resolves here. */
+  private[core] def committedDir(spark: SparkSession, tableDir: String,
+      version: Option[Long]): String = {
+    val vs = committedVersions(fileSystem(spark, tableDir), tableDir)
     require(vs.nonEmpty, s"no committed versions at $tableDir")
     val v = version.getOrElse(vs.max)
     require(vs.contains(v),
       s"version $v not committed at $tableDir (have ${vs.sorted.mkString(",")})")
-    OwnDirs.readParquet(spark, versionDir(tableDir, v))
+    versionDir(tableDir, v)
   }
 
   /** The data directory of version `v` — read it only once `v` is
@@ -254,9 +266,7 @@ object Snapshots {
     * restored version numbers, ascending. */
   def unrollback(spark: SparkSession, tableDir: String): Seq[Long] = {
     val fs = fileSystem(spark, tableDir)
-    val restored = Option(fs.globStatus(new HPath(tableDir, "v=*")))
-      .getOrElse(Array.empty).toSeq
-      .flatMap(s => versionOf(s.getPath.getName))
+    val restored = dataDirVersions(fs, tableDir)
       .filter(v => fs.exists(new HPath(tableDir, s"v=$v/$Tombstone")))
       .sorted
     restored.foreach { v =>
@@ -305,11 +315,9 @@ object Snapshots {
     // unmarked v=* data dirs (crashed pre-protocol writers, pruned
     // leftovers) — markers alone decide visibility, so marker-less dirs
     // are unreachable debris
-    val orphans = Option(fs.globStatus(new HPath(tableDir, "v=*")))
-      .getOrElse(Array.empty).toSeq
-      .filter(_.getModificationTime < cutoff)
-      .flatMap(s => versionOf(s.getPath.getName).map((_, s.getPath)))
-      .filterNot { case (v, _) => committed(v) }
+    val orphans = dataDirs(fs, tableDir)
+      .filter { case (v, s) => s.getModificationTime < cutoff && !committed(v) }
+      .map { case (v, s) => (v, s.getPath) }
       // rolled-back dirs are intentional undo data, not debris — they
       // outlive any grace window and are reclaimed only by prune
       .filterNot { case (_, p) => fs.exists(new HPath(p, Tombstone)) }
@@ -330,9 +338,6 @@ object Snapshots {
     orphans.map(_._1).sorted
   }
 
-  private[core] def versionOf(dirName: String): Option[Long] =
-    if (dirName.startsWith("v=")) dirName.drop(2).toLongOption else None
-
   /** Marker files present (claimed numbers, committed or dead). */
   private def committedMarkers(fs: FileSystem, tableDir: String): Seq[Long] = {
     val dir = new HPath(tableDir, "_commits")
@@ -340,10 +345,13 @@ object Snapshots {
     else fs.listStatus(dir).toSeq.flatMap(_.getPath.getName.toLongOption)
   }
 
+  /** Every `v=N` data dir (committed, rolled back or debris). */
+  private def dataDirs(fs: FileSystem, tableDir: String): Seq[(Long, FileStatus)] =
+    Option(fs.globStatus(new HPath(tableDir, "v=*"))).getOrElse(Array.empty)
+      .toSeq.flatMap(s => s.getPath.getName.drop(2).toLongOption.map(_ -> s))
+
   private def dataDirVersions(fs: FileSystem, tableDir: String): Seq[Long] =
-    Option(fs.globStatus(new HPath(tableDir, "v=*")))
-      .getOrElse(Array.empty).toSeq
-      .flatMap(s => versionOf(s.getPath.getName))
+    dataDirs(fs, tableDir).map(_._1)
 
   /** A version is committed iff its marker AND its data dir exist: the
     * marker is the claim, the (atomically renamed) data dir is the

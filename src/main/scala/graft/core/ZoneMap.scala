@@ -78,43 +78,14 @@ object ZoneMap {
     * only survivors, apply the exact predicate. Envelope pruning is
     * conservative, so this returns exactly what the full scan would. */
   def rangeLookup(spark: SparkSession, index: DataFrame, c: String,
-      lo: Any, hi: Any): DataFrame = {
-    val files = candidateFiles(index, c, lo, hi)
-    if (files.isEmpty) {
-      // Every file pruned: read ONE file's schema (footer only — the
-      // false filter prunes all row groups) so the empty result still
-      // carries the table schema.
-      spark.read.parquet(anyFileOf(index)).filter(lit(false))
-    } else {
-      spark.read.parquet(files: _*)
-        .filter(col(c) >= lit(lo) && col(c) <= lit(hi))
-    }
-  }
+      lo: Any, hi: Any): DataFrame =
+    OwnDirs.readCandidates(spark, index, candidateFiles(index, c, lo, hi),
+      col(c) >= lit(lo) && col(c) <= lit(hi))
 
-  private def anyFileOf(index: DataFrame): String = {
-    val f = index.select(col("file")).limit(1).collect()
-    require(f.nonEmpty, "empty zone map: no files to derive a schema from")
-    f(0).getString(0)
-  }
-
-  /** Fail-loud staleness gate, same contract as [[BloomIndex.validate]]:
-    * the index's file set must be EXACTLY the table's current listing —
-    * a subset means appended files a lookup would silently miss. */
-  def validate(spark: SparkSession, index: DataFrame, tableDir: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val indexed = index.select(col("file")).collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-    val p = new HPath(tableDir)
-    val fs = OwnDirs.fileSystem(spark, tableDir)
-    val current = fs.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toUri.getPath).toSet
-    require(indexed == current,
-      s"ZoneMap is stale for $tableDir: " +
-        s"${(current -- indexed).size} unindexed file(s), " +
-        s"${(indexed -- current).size} vanished file(s) — rebuild after " +
-        "compaction/recluster/append")
-  }
+  /** Fail-loud staleness gate, same contract as [[BloomIndex.validate]]
+    * ([[OwnDirs.requireCurrent]]). */
+  def validate(spark: SparkSession, index: DataFrame, tableDir: String): Unit =
+    OwnDirs.requireCurrent(spark, "ZoneMap", index, tableDir)
 
   // ------------------------------------------------------ versioned form
 
@@ -141,9 +112,7 @@ object ZoneMap {
     * usable with [[candidateFiles]]/[[rangeLookup]]. */
   def forVersion(spark: SparkSession, tableDir: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(Snapshots.versions(spark, tableDir).lastOption
-      .getOrElse(sys.error(s"no committed versions under $tableDir")))
-    val dir = s"$tableDir/v=$v"
+    val dir = Snapshots.committedDir(spark, tableDir, version)
     OwnDirs.readParquet(spark, s"$dir/_zonemap")
       .withColumn("file", concat(lit(s"$dir/"), col("file")))
   }

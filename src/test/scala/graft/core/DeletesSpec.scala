@@ -206,6 +206,79 @@ class DeletesSpec extends SparkSpec {
     assert(rows(merged) === Set((1L, "a2"), (3L, "c"), (4L, "d")))
   }
 
+  test("a table column named _v reads back unchanged") {
+    val dir = tmp()
+    Snapshots.commit(Seq((1L, 10L), (2L, 20L)).toDF("k", "_v"), dir)  // v1
+    Deletes.commitDeletes(spark, dir, Seq(2L).toDF("k"))              // v2
+    val merged = Deletes.readMerged(spark, dir)
+    assert(merged.columns.toSeq === Seq("k", "_v"))
+    assert(merged.as[(Long, Long)].collect().toSeq === Seq((1L, 10L)))
+  }
+
+  /** A table with `n` live versions: one plain commit, then upserts that
+    * each supersede one earlier key and add one new key. */
+  private def upsertHistory(n: Int): String = {
+    val dir = tmp()
+    Snapshots.commit(Seq((0L, "v1")).toDF("k", "s"), dir)
+    (2 to n).foreach(v => Deletes.commitUpsert(spark, dir,
+      Seq((v / 2L, s"v$v"), (v.toLong, s"v$v")).toDF("k", "s"), Seq("k")))
+    dir
+  }
+
+  test("a merged read launches the same jobs at 2, 8 and 32 versions") {
+    val jobs = Seq(2, 8, 32).map { n =>
+      val dir = upsertHistory(n)
+      assert(Snapshots.versions(spark, dir).size === n)
+      val (count, jobs) = countJobs(Deletes.readMerged(spark, dir).count())
+      // keys 0..n, each last written by the newest version naming it
+      assert(count === n + 1L)
+      jobs
+    }
+    assert(jobs.distinct.size === 1, s"jobs at 2/8/32 versions: $jobs")
+    assert(jobs.head <= 3, s"jobs at 2/8/32 versions: $jobs")
+  }
+
+  /** The file relations of `df`'s optimized plan, as their root paths. */
+  private def relations(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            r.location.rootPaths.map(_.toString)
+        }
+    }
+
+  test("a merged read scans the data once, with no union") {
+    val dir = upsertHistory(8)
+    val merged = Deletes.readMerged(spark, dir)
+    val plan = merged.queryExecution.optimizedPlan
+    assert(plan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }.isEmpty)
+    val (deletes, data) =
+      relations(merged).partition(_.forall(_.contains("/_deletes/")))
+    assert(data.size === 1)
+    assert(data.head.map(f => f.take(f.lastIndexOf('/'))).distinct.size === 8)
+    assert(deletes.size === 1)
+  }
+
+  test("one anti-join per distinct delete-key column set") {
+    val dir = tmp()
+    Snapshots.commit(
+      Seq((1L, "a"), (2L, "b"), (2L, "c"), (3L, "d")).toDF("k", "s"), dir) // v1
+    Deletes.commitDeletes(spark, dir, Seq(1L).toDF("k"))                   // v2
+    Deletes.commitDeletes(spark, dir, Seq((2L, "b")).toDF("k", "s"))      // v3
+    Snapshots.commit(Seq((1L, "a2"), (2L, "b")).toDF("k", "s"), dir)      // v4
+    Deletes.commitDeletes(spark, dir, Seq(3L).toDF("k"))                   // v5
+    val merged = Deletes.readMerged(spark, dir)
+    assert(rows(merged) === Set((1L, "a2"), (2L, "b"), (2L, "c")))
+    assert(relations(merged).count(_.forall(_.contains("/_deletes/"))) === 2)
+    assert(rows(Deletes.readMerged(spark, dir, Some(3L))) ===
+      Set((2L, "c"), (3L, "d")))
+    assert(rows(Deletes.readMerged(spark, dir, Some(2L))) ===
+      Set((2L, "b"), (2L, "c"), (3L, "d")))
+  }
+
   test("footer schema equals the inferred schema") {
     val dir = tmp()
     Snapshots.commit(spark.sql("""

@@ -144,4 +144,16 @@ class ZoneMapSpec extends SparkSpec {
       .select("v").as[String].collect().toSet
     assert(got1 === (500L to 503L).map(i => s"a$i").toSet)
   }
+
+  test("forVersion refuses a rolled-back version") {
+    val d = Files.createTempDirectory("graft-zm-rb").toString
+    val v1 = ZoneMap.commitZoned(Seq((1L, "a")).toDF("k", "v"), d, Seq("k"))
+    val v2 = ZoneMap.commitZoned(Seq((2L, "b")).toDF("k", "v"), d, Seq("k"))
+    Snapshots.rollback(spark, d, v1)
+    val e = intercept[IllegalArgumentException] {
+      ZoneMap.forVersion(spark, d, Some(v2))
+    }
+    assert(e.getMessage.contains(s"version $v2 not committed"))
+    assert(ZoneMap.forVersion(spark, d).count() === 1L)
+  }
 }
