@@ -41,7 +41,7 @@ object AtomicParquet {
     val backup = new HPath(destDir + ".__old__")
     recoverIfNeeded(fs, dest, backup)
     fs.delete(staging, true)
-    val w = df.write.mode("overwrite")
+    val w = OwnDirs.write(df).mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(staging.toString)
     // swap: dest -> backup, staging -> dest, drop backup

@@ -162,7 +162,7 @@ object BloomIndex {
           col(keyCol).cast("long").as("k"))
         .groupBy(col("file"))
         .agg(count(lit(1)).as("n_rows"), agg(col("k")).as("bloom"))
-      idx.write.mode("error").parquet(s"$staging/_bloom")
+      OwnDirs.write(idx).mode("error").parquet(s"$staging/_bloom")
     }
   }
 

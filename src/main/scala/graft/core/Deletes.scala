@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import OwnDirs.fileSystem
 
@@ -13,12 +14,14 @@ import OwnDirs.fileSystem
   * versioned-table story (public design: Iceberg v2 equality deletes,
   * Delta deletion vectors).
   *
-  * A delete commit is an ordinary snapshot version whose data payload is
-  * EMPTY (schema-preserving) and whose key set lives in a `_deletes/`
-  * parquet dir inside the version — so it rides the existing commit
-  * protocol unchanged: atomic, concurrent-writer safe, taggable for
-  * exactly-once replays, visible iff the version is, rolled back /
-  * time-traveled like any other version.
+  * A delete commit is an ordinary snapshot version that holds no data
+  * file, only its key set in a `_deletes/` parquet dir; an upsert
+  * commit is a data version whose delete set is its own rows' key
+  * columns, named by a zero-byte `_keys-<names>` tag (no second copy of
+  * the keys). Both ride the existing commit protocol unchanged: atomic,
+  * concurrent-writer safe, taggable for exactly-once replays, visible
+  * iff the version is, rolled back / time-traveled like any other
+  * version, and written in one Spark write each.
   *
   * Read-side semantics (Iceberg sequence-number rule): a delete at
   * version D removes matching rows from versions STRICTLY BEFORE D.
@@ -29,7 +32,7 @@ import OwnDirs.fileSystem
   *
   * The 100 TB shape: a read is one plan whatever the history length —
   * one parquet scan over every live version's data, one scan per
-  * DISTINCT delete-key column set (usually one) over the delete files,
+  * DISTINCT delete-key column set (usually one) over the delete sets,
   * and one anti-join per delete scan; each row's version comes from its
   * file's path. Delete sets between maintenance passes are batch-sized,
   * not table-sized. [[materialize]] is the maintenance half — fold the
@@ -49,22 +52,25 @@ object Deletes {
   private val DeleteDir = "_deletes"
 
   /** Commit a delete-only version: `keys`' columns ARE the equality
-    * key. Requires at least one committed version (the empty payload
-    * borrows the latest version's schema). Returns the version number.
-    */
+    * key. The version holds no data file, only the key set (Spark jobs:
+    * the key set's write, at most 2); [[Snapshots.read]] reads it as an
+    * empty frame with the previous version's schema. Fails on a table
+    * with no committed version. Returns the version number. */
   def commitDeletes(spark: SparkSession, tableDir: String,
-      keys: DataFrame): Long =
-    Snapshots.commitWith(emptyPayload(spark, tableDir), tableDir,
-      writeKeys(keys))
+      keys: DataFrame): Long = {
+    requireVersion(spark, tableDir)
+    Snapshots.commitStaged(spark, tableDir, writeKeys(keys))
+  }
 
   /** [[commitDeletes]] with an idempotency tag (same contract as
     * [[Snapshots.commitTagged]]): a replayed delete batch — a rewound
     * CDC checkpoint — is skipped when a committed version already
     * carries `tag`. */
   def commitDeletesTagged(spark: SparkSession, tableDir: String,
-      keys: DataFrame, tag: String): Option[Long] =
-    Snapshots.commitTaggedWith(emptyPayload(spark, tableDir), tableDir, tag,
-      writeKeys(keys))
+      keys: DataFrame, tag: String): Option[Long] = {
+    requireVersion(spark, tableDir)
+    Snapshots.commitTaggedStaged(spark, tableDir, tag, writeKeys(keys))
+  }
 
   /** Upsert one batch: commit `rows` as a version whose delete-key set
     * is the rows' OWN key projection. Under the sequence-number read
@@ -74,12 +80,16 @@ object Deletes {
     * unseen keys are plain inserts. Duplicate keys WITHIN one batch are
     * not resolved — both rows land at the same version; dedup the batch
     * upstream ([[graft.clean.Cleaners]]) if last-wins is needed.
-    * Works on an empty table (first version). */
+    * Works on an empty table (first version).
+    *
+    * The key set is not written again: the version's data files hold
+    * it, and a zero-byte `_keys-<names>` tag ([[keyTag]]) names the key
+    * columns [[readMerged]] reads them with. So the commit is one Spark
+    * write (one job for a local frame) and evaluates `rows` once. */
   def commitUpsert(spark: SparkSession, tableDir: String,
       rows: DataFrame, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "commitUpsert: keyCols must be non-empty")
-    Snapshots.commitWith(rows, tableDir,
-      writeKeys(rows.select(keyCols.map(col): _*)))
+    Snapshots.commitWith(rows, tableDir, stageKeys(rows, keyCols))
   }
 
   /** [[commitUpsert]] with an idempotency tag — the exactly-once hook
@@ -88,20 +98,58 @@ object Deletes {
   def commitUpsertTagged(spark: SparkSession, tableDir: String,
       rows: DataFrame, keyCols: Seq[String], tag: String): Option[Long] = {
     require(keyCols.nonEmpty, "commitUpsertTagged: keyCols must be non-empty")
-    Snapshots.commitTaggedWith(rows, tableDir, tag,
-      writeKeys(rows.select(keyCols.map(col): _*)))
+    Snapshots.commitTaggedWith(rows, tableDir, tag, stageKeys(rows, keyCols))
   }
 
-  private def emptyPayload(spark: SparkSession, tableDir: String): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Snapshots.read(spark, tableDir).schema)
+  private def requireVersion(spark: SparkSession, tableDir: String): Unit =
+    require(Snapshots.versions(spark, tableDir).nonEmpty,
+      s"no committed versions at $tableDir")
+
+  private val KeyTagPrefix = "_keys-"
+
+  /** Longest name the tag may take: the usual 255-byte name limit of
+    * local filesystems and HDFS, less the 5 that the `.<name>.crc` side
+    * file of a checksummed filesystem adds. */
+  private[core] val MaxTagLength = 250
+
+  private val Plain = (('a' to 'z') ++ ('A' to 'Z') ++ ('0' to '9') :+ '_').toSet
+
+  /** The name of the zero-byte tag that names an upsert version's key
+    * columns: `_keys-` and the names joined by `.`, every character
+    * outside `[A-Za-z0-9_]` written as `~` and four hex digits. So the
+    * name holds no `=`, `/` or `.` of a column name: Spark's listing
+    * skips it (leading `_`, no `=`), and it never parses as a `_tag-`. */
+  private[core] def keyTag(keyCols: Seq[String]): String =
+    KeyTagPrefix + keyCols.map(_.flatMap(c =>
+      if (Plain(c)) c.toString else f"~${c.toInt}%04x")).mkString(".")
+
+  /** The key columns a version dir entry named `name` names, if it is a
+    * [[keyTag]]. */
+  private[core] def keysOf(name: String): Option[Seq[String]] =
+    Option.when(name.startsWith(KeyTagPrefix))(
+      name.stripPrefix(KeyTagPrefix).split("\\.", -1).toSeq.map(
+        "~([0-9a-f]{4})".r.replaceAllIn(_, m => scala.util.matching.Regex
+          .quoteReplacement(Integer.parseInt(m.group(1), 16).toChar.toString))))
+
+  /** The staged-dir hook of an upsert: the key tag of the columns
+    * `keyCols` resolves to in `rows` (so the tag names the columns as
+    * the data files store them). Key names too long for one file name
+    * fall back to a `_deletes` key set, which [[readMerged]] reads too. */
+  private def stageKeys(rows: DataFrame,
+      keyCols: Seq[String]): (FileSystem, HPath) => Unit = {
+    val keys = rows.select(keyCols.map(col): _*)
+    val tag = keyTag(keys.columns.toSeq)
+    if (tag.length > MaxTagLength) writeKeys(keys)
+    else (fs, staging) => fs.create(new HPath(staging, tag), true).close()
+  }
 
   // no coalesce(1): a CDC delete batch can be corpus-scale, and a
   // single-file write would single-thread it — the key set lands with
-  // the distinct's own parallelism (small sets fold away at the next
-  // materialize/squash anyway)
+  // the distinct's own parallelism (AQE coalesces a small set to one
+  // file; small sets fold away at the next materialize/squash anyway).
+  // The write creates the staging dir: a delete version holds no data.
   private def writeKeys(keys: DataFrame): (FileSystem, HPath) => Unit =
-    (_, staging) => keys.distinct().write.mode("error")
+    (_, staging) => OwnDirs.write(keys.distinct()).mode("error")
       .parquet(new HPath(staging, DeleteDir).toString)
 
   /** The table's merged contents at `version` (latest when None): union
@@ -110,15 +158,22 @@ object Deletes {
     * contract (same as [[Compaction.squashVersions]]): versions are
     * appends, not full copies. Every table column reads back as written.
     *
+    * A version's delete set is its `_deletes` key files (a delete
+    * version; an upsert written before key tags existed) or, for an
+    * upsert, its own data files read with the key columns its
+    * [[keyTag]] names as the schema. The oldest version read has no
+    * earlier row to delete, so its set is not read.
+    *
     * Read cost: one plan shape whatever the number of versions — one
     * scan over the version data files, one per distinct delete-key
-    * column set over the `_deletes` files, and per delete scan one
+    * column set over the delete sets, and per delete scan one
     * null-safe anti-join on `keys && rowVersion < deleteVersion`, each
     * version parsed from the file's path. A count launches the same few
     * jobs at 2 or 32 live versions. Building the frame launches none: it
-    * lists each version dir and `_deletes` dir once and reads one footer
-    * per dir on the driver (each schema resolved on its own, so a strict
-    * read still fails on schema drift). */
+    * lists each version dir once (and a `_deletes` dir where the version
+    * dir holds one) and reads one footer per dir on the driver (each
+    * schema resolved on its own, so a strict read still fails on schema
+    * drift). */
   def readMerged(spark: SparkSession, tableDir: String,
       version: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
     val all = Snapshots.versions(spark, tableDir)
@@ -130,9 +185,18 @@ object Deletes {
     // as null. Strict by default so an accidental schema drift fails
     // loudly instead of null-filling.
     val dirs = vs.map(Snapshots.versionDir(tableDir, _))
-    val data = OwnDirs.scan(spark, OwnDirs.listings(spark, dirs), mergeSchema)
-    val deleteSets = OwnDirs.listings(spark,
-      dirs.map(d => new HPath(d, DeleteDir).toString))
+    val listed = OwnDirs.listings(spark, dirs)
+    require(listed.nonEmpty, s"no data file in the committed versions at " +
+      s"$tableDir up to ${vs.max}")
+    val data = OwnDirs.scan(spark, listed, mergeSchema)
+    val later = dirs.tail.toSet
+    val byDir = listed.map(l => l.dir -> l).toMap
+    val upsertSets = listed.filter(l => later(l.dir)).flatMap(l =>
+      l.hiddenNames.flatMap(keysOf).headOption.map(keys =>
+        l.copy(schema = StructType(keys.map(l.schema(_))))))
+    val deleteSets = upsertSets ++ OwnDirs.listings(spark, dirs.tail
+      .filter(d => byDir.get(d).forall(_.hiddenNames.contains(DeleteDir)))
+      .map(d => new HPath(d, DeleteDir).toString))
     // one anti-join per DISTINCT key-column set (usually exactly one)
     deleteSets.groupBy(_.schema.fieldNames.sorted.toSeq).foldLeft(data) {
       case (acc, (cols, sets)) =>

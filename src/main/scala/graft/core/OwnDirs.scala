@@ -11,7 +11,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.lit
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * [[readParquet]] takes it from there instead:
   * one listing plus one footer read on the driver, and no Spark job.
   * [[scan]] reads many such directories as one scan on their
-  * [[listings]].
+  * [[listings]]. Every staged write goes through [[write]].
   */
 private[core] object OwnDirs {
 
@@ -44,6 +44,20 @@ private[core] object OwnDirs {
   def fileSystem(spark: SparkSession, dir: String): FileSystem =
     new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** The writer of every staged parquet write in this package
+    * ([[Snapshots]] versions, [[Deletes]] key sets, `_bloom`/`_zonemap`
+    * indexes, [[AtomicParquet]] staging). A staged dir becomes visible
+    * only by this package's own rename, which is what makes the write
+    * atomic, so the output committer's job-level guarantees buy nothing:
+    * no `_SUCCESS` marker is written (nothing here reads one), and
+    * algorithm 2 moves each task's files into place at task commit
+    * instead of in a second pass at job commit. Per-write options, so
+    * the session's other writes keep Spark's defaults. */
+  def write(df: DataFrame): DataFrameWriter[Row] =
+    df.write
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+
   /** `spark.read.parquet(dir)` without the schema-inference job, as one
     * [[scan]] on `dir`'s [[listings]]. Falls back to the plain read when
     * `dir` has no listing (missing, empty or a partitioned layout), so
@@ -55,31 +69,35 @@ private[core] object OwnDirs {
   /** The Spark schema stored in the footer of one data file of `dir`. */
   def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
-    visibleFiles(conf, dir).flatMap(fs => fileSchema(conf, fs.head))
+    val path = new HPath(dir)
+    Try(path.getFileSystem(conf).listStatus(path).toSeq).toOption
+      .flatMap(_.find(isDataFile)).flatMap(fileSchema(conf, _))
   }
 
-  /** A directory listed once: its data files and their schema. */
-  final case class Listing(files: Seq[FileStatus], schema: StructType)
+  /** A directory listed once: its data files, their schema, and the
+    * names of the entries a Spark read skips (tags, `_deletes`, indexes,
+    * checksums). */
+  final case class Listing(dir: String, files: Seq[FileStatus],
+      schema: StructType, hiddenNames: Seq[String])
 
   /** The [[Listing]] of each of `dirs` that has one: the schema is the
     * one stored in the first file's footer, inferred by Spark (one job)
     * when it has none. One Hadoop conf serves every dir. */
   def listings(spark: SparkSession, dirs: Seq[String]): Seq[Listing] = {
     val conf = spark.sessionState.newHadoopConf()
-    dirs.flatMap(dir => visibleFiles(conf, dir).map(fs => Listing(fs,
-      fileSchema(conf, fs.head).getOrElse(spark.read.parquet(dir).schema))))
-  }
-
-  /** `dir`'s [[dataFiles]]; None when `dir` is missing, holds none, or
-    * holds directories Spark would read too (a partitioned layout). */
-  private def visibleFiles(conf: Configuration,
-      dir: String): Option[Seq[FileStatus]] = {
-    val path = new HPath(dir)
-    val visible =
-      try path.getFileSystem(conf).listStatus(path).toSeq
-        .filterNot(s => hidden(s.getPath.getName))
-      catch { case _: FileNotFoundException => Nil }
-    Option.when(visible.nonEmpty && !visible.exists(_.isDirectory))(visible)
+    dirs.flatMap { dir =>
+      val path = new HPath(dir)
+      val (skipped, visible) =
+        try path.getFileSystem(conf).listStatus(path).toSeq
+          .partition(s => hidden(s.getPath.getName))
+        catch { case _: FileNotFoundException => (Nil, Nil) }
+      // none: missing, no data file, or a partitioned layout (Spark
+      // would read its subdirectories too)
+      Option.when(visible.nonEmpty && !visible.exists(_.isDirectory))(
+        Listing(dir, visible,
+          fileSchema(conf, visible.head).getOrElse(spark.read.parquet(dir).schema),
+          skipped.map(_.getPath.getName)))
+    }
   }
 
   /** Names Spark's file listing skips. */

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 
 import OwnDirs.fileSystem
 
@@ -15,9 +15,16 @@ import OwnDirs.fileSystem
   * {{{
   *   table/
   *     v=1/ v=2/ ...              immutable per-version parquet dirs
+  *       part-*                   data files (none in a delete version)
+  *       _tag-<tag>               zero-byte idempotency tags
+  *       _keys-<names>            zero-byte upsert key tag ([[Deletes]])
+  *       _deletes/                delete key files ([[Deletes]])
   *     _commits/1 _commits/2 ...  zero-byte commit markers
   *     _staging/<uuid>/           writer-private in-flight attempts
   * }}}
+  * No `_SUCCESS` file is written ([[OwnDirs.write]]): a version is
+  * complete because its rename published it, not because a committer
+  * marked it.
   *
   * Protocol (concurrent-writer safe): each commit writes its data into
   * a WRITER-UNIQUE `_staging/<uuid>` directory, claims a version number
@@ -66,20 +73,33 @@ object Snapshots {
   def commit(df: DataFrame, tableDir: String): Long =
     commitWith(df, tableDir, (_, _) => ())
 
-  /** The commit skeleton shared by every variant: stage uniquely, run
-    * `beforeClaim` against the staged data dir (tags, per-version
-    * indexes — anything that must be visible iff the version is), then
-    * claim + publish. Package-private so sibling per-version artifacts
+  /** [[commitStaged]] with `df` as the version's data: `beforeClaim`
+    * runs against the staged data dir once `df` is written there (tags,
+    * per-version indexes — anything that must be visible iff the
+    * version is). Package-private so sibling per-version artifacts
     * ([[BloomIndex.commitIndexed]]) ride the same atomicity. */
   private[core] def commitWith(df: DataFrame, tableDir: String,
-      beforeClaim: (FileSystem, HPath) => Unit): Long = {
-    val spark = df.sparkSession
+      beforeClaim: (FileSystem, HPath) => Unit): Long =
+    commitStaged(df.sparkSession, tableDir, stageData(df, beforeClaim))
+
+  private def stageData(df: DataFrame,
+      beforeClaim: (FileSystem, HPath) => Unit): (FileSystem, HPath) => Unit =
+    (fs, staging) => {
+      OwnDirs.write(df).mode("error").parquet(staging.toString)
+      beforeClaim(fs, staging)
+    }
+
+  /** The commit skeleton shared by every variant: `stage` fills a
+    * writer-unique staging dir, then the version is claimed and
+    * published. A version need not hold a data file: a
+    * [[Deletes.commitDeletes]] version holds only its key set. */
+  private[core] def commitStaged(spark: SparkSession, tableDir: String,
+      stage: (FileSystem, HPath) => Unit): Long = {
     val fs = fileSystem(spark, tableDir)
     fs.mkdirs(new HPath(tableDir, "_commits"))
     val staging =
       new HPath(tableDir, s"_staging/${java.util.UUID.randomUUID()}")
-    df.write.mode("error").parquet(staging.toString)
-    beforeClaim(fs, staging)
+    stage(fs, staging)
     var attempt = 0
     var v = nextVersion(fs, tableDir)
     while (attempt < MaxCommitRetries) {
@@ -153,11 +173,17 @@ object Snapshots {
     * see [[BloomIndex.commitIndexedTagged]]); the tag file and the
     * hook's artifacts share the version's atomicity. */
   private[graft] def commitTaggedWith(df: DataFrame, tableDir: String,
-      tag: String, beforeClaim: (FileSystem, HPath) => Unit): Option[Long] = {
-    if (taggedVersion(df.sparkSession, tableDir, tag).isDefined) return None
-    Some(commitWith(df, tableDir, (f, data) => {
-      writeTag(f, data, tag)
-      beforeClaim(f, data)
+      tag: String, beforeClaim: (FileSystem, HPath) => Unit): Option[Long] =
+    commitTaggedStaged(df.sparkSession, tableDir, tag,
+      stageData(df, beforeClaim))
+
+  /** [[commitStaged]] under [[commitTagged]]'s idempotency contract. */
+  private[core] def commitTaggedStaged(spark: SparkSession, tableDir: String,
+      tag: String, stage: (FileSystem, HPath) => Unit): Option[Long] = {
+    if (taggedVersion(spark, tableDir, tag).isDefined) return None
+    Some(commitStaged(spark, tableDir, (f, staging) => {
+      stage(f, staging)
+      writeTag(f, staging, tag)
     }))
   }
 
@@ -179,22 +205,42 @@ object Snapshots {
       fs.exists(new HPath(tableDir, s"v=$v/$TagPrefix$tag")))
   }
 
-  /** Read a specific committed version, or the latest when None. */
+  /** Read a specific committed version, or the latest when None. A
+    * version with no data file (a [[Deletes.commitDeletes]] key set)
+    * reads as an empty frame with the schema of the newest earlier
+    * version that has one; building the frame runs no Spark job. */
   def read(spark: SparkSession, tableDir: String,
-      version: Option[Long] = None): DataFrame =
-    OwnDirs.readParquet(spark, committedDir(spark, tableDir, version))
+      version: Option[Long] = None): DataFrame = {
+    val (vs, v) = resolve(spark, tableDir, version)
+    vs.filter(_ <= v).sorted.reverseIterator
+      .flatMap(u => OwnDirs.listings(spark, Seq(versionDir(tableDir, u))))
+      .nextOption() match {
+      case Some(l) if l.dir == versionDir(tableDir, v) =>
+        OwnDirs.scan(spark, Seq(l), allowMissingColumns = false)
+      case Some(l) => spark.createDataFrame(java.util.List.of[Row](),
+        GraftShim.asNullable(l.schema))
+      case None => sys.error(s"Snapshots.read: version $v at $tableDir " +
+        "holds no data file, nor does any earlier version")
+    }
+  }
 
   /** The data dir of the committed version `version` names, or of the
     * latest when None; fails when it is not committed (never committed,
     * rolled back or pruned). Every per-version read resolves here. */
   private[core] def committedDir(spark: SparkSession, tableDir: String,
-      version: Option[Long]): String = {
+      version: Option[Long]): String =
+    versionDir(tableDir, resolve(spark, tableDir, version)._2)
+
+  /** The committed versions and the one `version` names (see
+    * [[committedDir]]). */
+  private def resolve(spark: SparkSession, tableDir: String,
+      version: Option[Long]): (Seq[Long], Long) = {
     val vs = committedVersions(fileSystem(spark, tableDir), tableDir)
     require(vs.nonEmpty, s"no committed versions at $tableDir")
     val v = version.getOrElse(vs.max)
     require(vs.contains(v),
       s"version $v not committed at $tableDir (have ${vs.sorted.mkString(",")})")
-    versionDir(tableDir, v)
+    (vs, v)
   }
 
   /** The data directory of version `v` — read it only once `v` is

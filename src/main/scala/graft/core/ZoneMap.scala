@@ -103,7 +103,7 @@ object ZoneMap {
           cols.map(col): _*)
         .groupBy(col("file"))
         .agg(count(lit(1)).as("n_rows"), envelopeAggs(cols): _*)
-      idx.write.mode("error").parquet(s"$staging/_zonemap")
+      OwnDirs.write(idx).mode("error").parquet(s"$staging/_zonemap")
     })
   }
 
