@@ -1,9 +1,6 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -24,48 +21,32 @@ import org.apache.spark.util.sketch.BloomFilter
   * rewriting data.
   *
   * Scale shape: the build is one pass over the table — per-file partial
-  * filters are merged map-side by the Aggregator, so only bloom
-  * bitmaps (not rows) cross the shuffle, one row per file lands in the
-  * index. Lookups read the tiny index, test the key driver-side, and
-  * scan only the surviving files.
+  * filters ([[Bloom.agg]]) are merged map-side, so only bloom bitmaps
+  * (not rows) cross the shuffle, one row per file lands in the index.
+  * Lookups read the tiny index, test the key driver-side, and scan only
+  * the surviving files.
   */
 object BloomIndex {
-
-  /** Serializable Bloom buffer (BloomFilterImpl is Externalizable, so
-    * plain Java serialization of the wrapper works for the partial-agg
-    * shuffle). */
-  final class Buf(var bf: BloomFilter) extends Serializable
-
-  private final class BuildAgg(expected: Long, fpp: Double)
-      extends Aggregator[java.lang.Long, Buf, Array[Byte]] {
-    def zero: Buf = new Buf(BloomFilter.create(expected, fpp))
-    def reduce(b: Buf, v: java.lang.Long): Buf = {
-      if (v != null) b.bf.putLong(v.longValue()); b
-    }
-    def merge(a: Buf, b: Buf): Buf = { a.bf.mergeInPlace(b.bf); a }
-    def finish(b: Buf): Array[Byte] = {
-      val bos = new ByteArrayOutputStream()
-      b.bf.writeTo(bos)
-      bos.toByteArray
-    }
-    def bufferEncoder: Encoder[Buf] = Encoders.javaSerialization[Buf]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
 
   /** Build the index over a parquet table: one row per data file with
     * (file, n_rows, bloom). `expectedItemsPerFile` sizes each filter
     * (overshoot is wasted KBs, undershoot inflates the fpp). The key
     * column must be integral — a silent cast would turn any other type
-    * into all-null probes and an index that filters nothing. */
+    * into all-null probes and an index that filters nothing. A file
+    * whose keys are all null gets a null `bloom`, which no key matches. */
   def build(spark: SparkSession, tableDir: String, keyCol: String,
       expectedItemsPerFile: Long, fpp: Double = 0.01): DataFrame = {
-    val agg = udaf(new BuildAgg(expectedItemsPerFile, fpp))
     val df = spark.read.parquet(tableDir)
     requireIntegralKey(df, keyCol)
-    df.select(input_file_name().as("file"), col(keyCol).cast("long").as("k"))
-      .groupBy(col("file"))
-      .agg(count(lit(1)).as("n_rows"), agg(col("k")).as("bloom"))
+    perFile(df, input_file_name(), keyCol, expectedItemsPerFile, fpp)
   }
+
+  /** One index row per `file` value of `rows`: (file, n_rows, bloom). */
+  private def perFile(rows: DataFrame, file: Column, keyCol: String,
+      expectedItemsPerFile: Long, fpp: Double): DataFrame =
+    rows.groupBy(file.as("file"))
+      .agg(count(lit(1)).as("n_rows"),
+        Bloom.agg(col(keyCol), expectedItemsPerFile, fpp).as("bloom"))
 
   private def requireIntegralKey(df: DataFrame, keyCol: String): Unit = {
     import org.apache.spark.sql.types._
@@ -94,7 +75,9 @@ object BloomIndex {
 
   /** Files that may contain ANY of `keys` (driver-side test over the
     * per-file index — the index has one row per file, so collecting it
-    * is bounded by file count, not data size). */
+    * is bounded by file count, not data size; `might_contain` needs one
+    * filter for all rows, so it cannot test a per-row column). A null
+    * `bloom` (no non-null key in the file) contains nothing. */
   def candidateFiles(index: DataFrame, keys: Seq[Long]): Seq[String] =
     index.select(col("file"), col("bloom")).collect().toSeq
       .map { r =>
@@ -107,11 +90,9 @@ object BloomIndex {
             "_bloom dir directly")
         r
       }
-      .filter { r =>
-        val bf = BloomFilter.readFrom(
-          new ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        keys.exists(bf.mightContainLong)
-      }
+      .filter(r => Option(r.getAs[Array[Byte]]("bloom"))
+        .map(b => BloomFilter.readFrom(b))
+        .exists(bf => keys.exists(bf.mightContainLong)))
       .map(_.getString(0))
 
   // ------------------------------------------------------ versioned form
@@ -154,14 +135,10 @@ object BloomIndex {
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) => Unit = {
     requireIntegralKey(df, keyCol)
     (_, staging) => {
-      val spark = df.sparkSession
-      val agg = udaf(new BuildAgg(expectedItemsPerFile, fpp))
-      val idx = OwnDirs.readParquet(spark, staging.toString)
-        .select(
-          element_at(split(input_file_name(), "/"), -1).as("file"),
-          col(keyCol).cast("long").as("k"))
-        .groupBy(col("file"))
-        .agg(count(lit(1)).as("n_rows"), agg(col("k")).as("bloom"))
+      val idx = perFile(
+        OwnDirs.readParquet(df.sparkSession, staging.toString),
+        element_at(split(input_file_name(), "/"), -1), keyCol,
+        expectedItemsPerFile, fpp)
       OwnDirs.write(idx).mode("error").parquet(s"$staging/_bloom")
     }
   }

@@ -1,23 +1,22 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
-
-import org.apache.spark.sql.{Column, DataFrame, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+
+import graft.core.Bloom
 
 /** Bloom-filter semi-join prefilter: reduce a big probe side by a compact
   * membership sketch of the build side's keys *before* the exact join.
   *
   * At scale this is the pattern behind runtime row-group filtering: when
   * the build side's key set is too large to broadcast as an exact hash
-  * relation but its Bloom filter (a few MB for tens of millions of keys
-  * at 1% fpp) is not, shipping the filter to every probe task cuts the
-  * probe-side shuffle volume by roughly the join selectivity. False
-  * positives only cost wasted shuffle rows; false negatives are
-  * impossible, so `prefilter(...)` followed by the exact join returns
-  * exactly the rows the plain join would.
+  * relation but its Bloom filter (under 5 MB for 4M keys at 1% fpp;
+  * larger key sets hit [[Bloom.agg]]'s size cap) is not, shipping the
+  * filter to every probe task cuts the probe-side shuffle volume by
+  * roughly the join selectivity. False positives only cost wasted
+  * shuffle rows; false negatives are impossible, so `prefilter(...)`
+  * followed by the exact join returns exactly the rows the plain join
+  * would.
   *
   * The sketch is aggregated distributively (partial filters merged by
   * OR), and only the final few-MB bitmap reaches the driver — bounded,
@@ -25,31 +24,15 @@ import org.apache.spark.sql.types.BinaryType
   */
 object BloomPrefilter {
 
-  /** Serialized Bloom filter over `keys.keyCol` (integral type). */
-  def buildBloom(
-      keys: DataFrame, keyCol: String,
-      expectedItems: Long, fpp: Double = 0.01): Array[Byte] = {
-    val bf = keys.stat.bloomFilter(keyCol, expectedItems, fpp)
-    val out = new ByteArrayOutputStream()
-    bf.writeTo(out)
-    out.toByteArray
-  }
-
-  /** `might_contain(<serialized bloom>, key)` as a Column — codegen'd,
-    * the filter deserializes once per task, not per row. */
-  def mightContain(bloomBytes: Array[Byte], key: Column): Column =
-    GraftShim.columnOf(BloomFilterMightContain(
-      Literal(bloomBytes, BinaryType),
-      GraftShim.expressionOf(key.cast("long"))))
-
   /** Probe-side rows that *may* have a build-side match (superset of the
-    * exact semi-join; follow with the exact join for exact results). */
+    * exact semi-join; follow with the exact join for exact results). An
+    * empty build side passes nothing. */
   def prefilter(
       probe: DataFrame, probeKey: String,
       build: DataFrame, buildKey: String,
       expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    val bloom = buildBloom(build, buildKey, expectedItems, fpp)
-    probe.filter(mightContain(bloom, col(probeKey)))
+    val bloom = Bloom.collect(build, col(buildKey), expectedItems, fpp)
+    probe.filter(Bloom.mightContain(bloom, col(probeKey)))
   }
 
   /** Exact semi-join with the Bloom prefilter applied first: the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{Bloom, CacheScope, Fixpoint}
 
 /** Per-node triangle counting + local clustering coefficient — the graph
   * statistic behind community detection, link-spam screens, and graph
@@ -27,13 +27,6 @@ import graft.core.CacheScope
   */
 object Triangles {
 
-  /** Edge-count ceiling for the small-graph fast paths below (degree
-    * broadcast, wedge Bloom pre-filter): 4M canonical edges means a
-    * ≤8M-node degree table (tens of MB hashed) and a ~5 MB Bloom — both
-    * comfortably broadcastable; above it the plan falls back to the
-    * shuffle form that scales to arbitrary graphs. */
-  private val SmallEdgeMaxRows: Long = graft.core.Fixpoint.PinMaxRows
-
   /** @param edges undirected edge list (self-loops and duplicates fine —
     *               canonicalized away); endpoints any orderable type.
     * Output: node, degree (distinct undirected neighbors), n_tri
@@ -55,12 +48,14 @@ object Triangles {
       .filter(col("a") =!= col("b"))
       .distinct())
     // one count over the retained blocks: the size signal for the
-    // degree-broadcast and wedge-Bloom branches (and the Bloom's
+    // node-sized broadcasts and the wedge Bloom (and the Bloom's
     // expectedNumItems) — the same known-small discipline as
     // Fixpoint.pinSmall, decided from the measured count, never from
-    // catalyst estimates (the cached distinct carries none)
+    // catalyst estimates (the cached distinct carries none). Every node
+    // is an endpoint of a canonical edge, so |V| <= 2 * undCount bounds
+    // the node-sized tables with no count of their own.
     val undCount = und.count()
-    val small = undCount <= SmallEdgeMaxRows
+    val maxNodes = 2 * undCount
 
     // |V|-sized degree table, retained: it feeds BOTH orientation join
     // legs and the final per-node join, and each consumer used to
@@ -70,12 +65,12 @@ object Triangles {
     val deg = scope.retain(und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree")))
-    // Broadcast it when the edge count proves it small (|V| ≤ 2·|E|) —
-    // the cached-distinct input has no catalyst stats, so the planner's
+    // Broadcast it when the node bound proves it small — the
+    // cached-distinct input has no catalyst stats, so the planner's
     // static choice was a pair of SortMergeJoins that exchanged the
     // edge set twice (plans/r15/q_triangles_before); guide §3.1. Above
     // the ceiling the equi-joins shuffle as before.
-    val degB = if (small) broadcast(deg) else deg
+    val degB = Fixpoint.broadcastSmall(deg, maxNodes)
 
     // Orient a->b when (deg(a), a) < (deg(b), b).
     val withDeg = und
@@ -100,7 +95,7 @@ object Triangles {
     // cache keeps HashPartitioning(src, n), so both wedge legs read it
     // exchange-free.
     val oriented = scope.retain(oriented0.repartition(
-      graft.core.Fixpoint.shufflePartitions(spark), col("src")))
+      Fixpoint.shufflePartitions(spark), col("src")))
 
     // Wedges at each oriented source; id order on (d1, d2) dedups the
     // unordered neighbor pair.
@@ -116,15 +111,13 @@ object Triangles {
     // non-closing wedges BEFORE the exchange at ~1% false-positive
     // cost; false positives are removed by the equi-join itself, false
     // negatives don't exist, so the result is bit-identical. Built only
-    // when the edge count proves the filter broadcastable (~9.6
-    // bits/key at 1%); the fallback is the unfiltered join, identical
-    // to before.
-    val wedgesScreened = if (small) {
-      val bf = und.select(xxhash64(col("a"), col("b")).as("__k"))
-        .stat.bloomFilter("__k", math.max(undCount, 1L), 0.01)
-      val bfB = spark.sparkContext.broadcast(bf)
-      val mightClose = udf((h: Long) => bfB.value.mightContainLong(h))
-      wedges.filter(mightClose(xxhash64(col("d1"), col("d2"))))
+    // when the edge count keeps the filter small enough to ship in the
+    // plan (~9.6 bits/key at 1%: about 4.8 MB at 4M edges); the
+    // fallback is the unfiltered join, identical to before.
+    val wedgesScreened = if (undCount <= Fixpoint.PinMaxRows) {
+      val bloom = Bloom.collect(und, xxhash64(col("a"), col("b")),
+        math.max(undCount, 1L), 0.01)
+      wedges.filter(Bloom.mightContain(bloom, xxhash64(col("d1"), col("d2"))))
     } else wedges
 
     // Close each wedge against the canonical edge set (d1 < d2 already
@@ -143,9 +136,9 @@ object Triangles {
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
 
     // triPerNode is node-bounded: broadcast it into the left join under
-    // the same measured-count guard (build-right outer join)
-    val triB = if (small) broadcast(triPerNode) else triPerNode
-    deg.join(triB, Seq("node"), "left")
+    // the same node bound (build-right outer join)
+    deg.join(Fixpoint.broadcastSmall(triPerNode, maxNodes), Seq("node"),
+      "left")
       .select(col("node"), col("degree"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))
       .withColumn("clustering",

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-quality regression tests: the scale claims (pushdown, pruning,
@@ -80,6 +81,15 @@ class PlanSpec extends SparkSpec {
     val p = plan("q_bloom_semi")
     assert(p.contains("might_contain"), "bloom prefilter missing from plan")
     assert(p.contains("LeftSemi"), "exact semi-join missing from plan")
+  }
+
+  test("q_triangles screens wedges with might_contain, not a Scala UDF") {
+    val q = SparkEntry.queries("q_triangles")(spark, dir).queryExecution
+    assert(q.explainString(FormattedMode).contains("might_contain"),
+      "wedge Bloom screen missing from plan")
+    val udfs = q.optimizedPlan.flatMap(_.expressions)
+      .filter(_.exists(_.isInstanceOf[ScalaUDF]))
+    assert(udfs.isEmpty, s"Scala UDF in plan: $udfs")
   }
 
   test("q_packing runs as one window sort per shard, no extra exchange") {

@@ -1,8 +1,10 @@
 package graft.core
 
+import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.SparkSpec
 
@@ -54,6 +56,49 @@ class BloomIndexSpec extends SparkSpec {
     val out = BloomIndex.lookup(spark, idx, "k", Seq(999999L))
     assert(out.columns.toSeq === Seq("k", "v"))
     assert(out.count() === 0L)
+  }
+
+  test("filters equal BloomFilter.create(n, fpp) fed the same keys by putLong") {
+    def created(keys: Seq[Long], n: Long): Seq[Byte] = {
+      val bf = BloomFilter.create(n, 0.01)
+      keys.foreach(bf.putLong)
+      val out = new ByteArrayOutputStream()
+      bf.writeTo(out)
+      out.toByteArray.toSeq
+    }
+    // per file: so indexes written by any earlier build probe the same
+    val idx = BloomIndex.build(spark, dir, "k", 2000L)
+      .select("file", "bloom").as[(String, Array[Byte])].collect()
+    assert(idx.length === spark.read.parquet(dir)
+      .select(input_file_name()).distinct().count())
+    idx.foreach { case (file, bytes) =>
+      val keys = spark.read.parquet(file).select("k").as[Long].collect()
+      assert(bytes.toSeq === created(keys.toSeq, 2000L), file)
+    }
+    // driver side: one filter over the whole table
+    assert(Bloom.collect(spark.read.parquet(dir), col("k"), 8000L, 0.01)
+      .toSeq === created(0L until 8000L, 8000L))
+  }
+
+  test("a file whose keys are all null gets a null filter that matches no key") {
+    val d = Files.createTempDirectory("graft-bloomnull").toString
+    Seq[(Option[Long], String)]((Some(1L), "a"), (Some(2L), "b"))
+      .toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(d)
+    Seq[(Option[Long], String)]((None, "c"), (None, "d"))
+      .toDF("k", "v").coalesce(1).write.mode("append").parquet(d)
+    val idx = BloomIndex.build(spark, d, "k", 100L)
+    assert(idx.count() === 2L)
+    assert(idx.filter(col("bloom").isNull).select("n_rows").as[Long]
+      .collect().toSeq === Seq(2L))
+    assert(BloomIndex.candidateFiles(idx, Seq(1L, 2L, 3L)).size === 1)
+    for (keys <- Seq(Seq(1L), Seq(2L, 3L), Seq(9L))) {
+      val viaIndex = BloomIndex.lookup(spark, idx, "k", keys)
+        .select("k", "v").as[(Long, String)].collect().toSet
+      val fullScan = spark.read.parquet(d)
+        .filter(col("k").isin(keys: _*))
+        .select("k", "v").as[(Long, String)].collect().toSet
+      assert(viaIndex === fullScan, s"keys=$keys")
+    }
   }
 
   test("non-integral key columns are rejected, not silently cast to null") {

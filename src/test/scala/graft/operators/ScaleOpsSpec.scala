@@ -152,6 +152,13 @@ class ScaleOpsSpec extends SparkSpec {
     assert(got === (1L to 5000L by 11).toSet)
   }
 
+  test("an empty build side gives an empty prefilter and semiJoin") {
+    val probe = (1L to 100L).toDF("k")
+    val build = Seq.empty[Long].toDF("bk")
+    assert(BloomPrefilter.prefilter(probe, "k", build, "bk", 64).count() === 0L)
+    assert(BloomPrefilter.semiJoin(probe, "k", build, "bk", 64).count() === 0L)
+  }
+
   // -------------------------------------------------------------- Packing
 
   test("streamPacking chunks each shard's token stream at the budget") {
