@@ -11,7 +11,7 @@ import graft.core.Bloom
   * At scale this is the pattern behind runtime row-group filtering: when
   * the build side's key set is too large to broadcast as an exact hash
   * relation but its Bloom filter (under 5 MB for 4M keys at 1% fpp;
-  * larger key sets hit [[Bloom.agg]]'s size cap) is not, shipping the
+  * larger ones need the cap raised, see [[Bloom.agg]]) is not, shipping the
   * filter to every probe task cuts the probe-side shuffle volume by
   * roughly the join selectivity. False positives only cost wasted
   * shuffle rows; false negatives are impossible, so `prefilter(...)`
@@ -31,8 +31,8 @@ object BloomPrefilter {
       probe: DataFrame, probeKey: String,
       build: DataFrame, buildKey: String,
       expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    val bloom = Bloom.collect(build, col(buildKey), expectedItems, fpp)
-    probe.filter(Bloom.mightContain(bloom, col(probeKey)))
+    probe.filter(Bloom.mightContain(build, col(buildKey), expectedItems,
+      fpp, col(probeKey)))
   }
 
   /** Exact semi-join with the Bloom prefilter applied first: the

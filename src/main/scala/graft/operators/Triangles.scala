@@ -51,11 +51,10 @@ object Triangles {
     // node-sized broadcasts and the wedge Bloom (and the Bloom's
     // expectedNumItems) — the same known-small discipline as
     // Fixpoint.pinSmall, decided from the measured count, never from
-    // catalyst estimates (the cached distinct carries none). Every node
-    // is an endpoint of a canonical edge, so |V| <= 2 * undCount bounds
-    // the node-sized tables with no count of their own.
+    // catalyst estimates (the cached distinct carries none). At the
+    // 4M-edge ceiling the node tables hold ≤ 8M rows (|V| ≤ 2·|E|); the
+    // co-order graph has far fewer (sf0.1: ≤ 20k parts, ~1.2M edges).
     val undCount = und.count()
-    val maxNodes = 2 * undCount
 
     // |V|-sized degree table, retained: it feeds BOTH orientation join
     // legs and the final per-node join, and each consumer used to
@@ -65,12 +64,12 @@ object Triangles {
     val deg = scope.retain(und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree")))
-    // Broadcast it when the node bound proves it small — the
-    // cached-distinct input has no catalyst stats, so the planner's
+    // Broadcast it when the edge count proves it small (|V| ≤ 2·|E|) —
+    // the cached-distinct input has no catalyst stats, so the planner's
     // static choice was a pair of SortMergeJoins that exchanged the
     // edge set twice (plans/r15/q_triangles_before); guide §3.1. Above
     // the ceiling the equi-joins shuffle as before.
-    val degB = Fixpoint.broadcastSmall(deg, maxNodes)
+    val degB = Fixpoint.broadcastSmall(deg, undCount)
 
     // Orient a->b when (deg(a), a) < (deg(b), b).
     val withDeg = und
@@ -111,14 +110,13 @@ object Triangles {
     // non-closing wedges BEFORE the exchange at ~1% false-positive
     // cost; false positives are removed by the equi-join itself, false
     // negatives don't exist, so the result is bit-identical. Built only
-    // when the edge count keeps the filter small enough to ship in the
-    // plan (~9.6 bits/key at 1%: about 4.8 MB at 4M edges); the
+    // when the edge count keeps the filter small enough to ship with
+    // every task (~9.6 bits/key at 1%: about 4.8 MB at 4M edges); the
     // fallback is the unfiltered join, identical to before.
-    val wedgesScreened = if (undCount <= Fixpoint.PinMaxRows) {
-      val bloom = Bloom.collect(und, xxhash64(col("a"), col("b")),
-        math.max(undCount, 1L), 0.01)
-      wedges.filter(Bloom.mightContain(bloom, xxhash64(col("d1"), col("d2"))))
-    } else wedges
+    val wedgesScreened = if (undCount <= Fixpoint.PinMaxRows)
+      wedges.filter(Bloom.mightContain(und, xxhash64(col("a"), col("b")),
+        math.max(undCount, 1L), 0.01, xxhash64(col("d1"), col("d2"))))
+    else wedges
 
     // Close each wedge against the canonical edge set (d1 < d2 already
     // holds, so the wedge pair is in canonical order). shuffle_hash: the
@@ -136,8 +134,8 @@ object Triangles {
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
 
     // triPerNode is node-bounded: broadcast it into the left join under
-    // the same node bound (build-right outer join)
-    deg.join(Fixpoint.broadcastSmall(triPerNode, maxNodes), Seq("node"),
+    // the same edge-count gate (build-right outer join)
+    deg.join(Fixpoint.broadcastSmall(triPerNode, undCount), Seq("node"),
       "left")
       .select(col("node"), col("degree"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))
