@@ -11,14 +11,12 @@ import graft.SparkSpec
 class BloomIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  // 8 files of 1000 disjoint keys each (a key lives in exactly one file)
+  // 8 files of 1000 disjoint keys each (a key lives in exactly one file):
+  // a range in 8 slices writes one file per slice
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-bloomidx").toString
-    (0L until 8000L).map(i => (i, s"payload-$i"))
-      .toDF("k", "v")
-      .withColumn("shard", (col("k") / 1000).cast("int"))
-      .repartition(8, col("shard"))
-      .drop("shard")
+    spark.range(0L, 8000L, 1L, 8)
+      .select(col("id").as("k"), concat(lit("payload-"), col("id")).as("v"))
       .write.mode("overwrite").parquet(d)
     d
   }
@@ -28,6 +26,7 @@ class BloomIndexSpec extends SparkSpec {
       expectedItemsPerFile = 2000L).cache()
     val nFiles = spark.read.parquet(dir)
       .select(input_file_name()).distinct().count()
+    assert(nFiles === 8L)
     assert(idx.count() === nFiles)
     assert(idx.agg(sum("n_rows")).as[Long].head() === 8000L)
 

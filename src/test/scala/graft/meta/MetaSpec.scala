@@ -1,10 +1,12 @@
 package graft.meta
 
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicLong
 
-import graft.SparkSpec
+import graft.{SparkCounters, SparkSpec}
 import graft.enrich.DistanceEnrichment
 import graft.multimodal.MultimodalOps
+import org.apache.spark.BusListeners
 import org.apache.spark.sql.functions._
 
 class MetaSpec extends SparkSpec {
@@ -27,6 +29,52 @@ class MetaSpec extends SparkSpec {
     val deadline = System.currentTimeMillis() + 10000
     while (audited < 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(audited == 4L)
+  }
+
+  /** Write `df` to the noop sink; `measure` drains the bus, so the
+    * audit listener has run when this returns. */
+  private def writeNoop(df: org.apache.spark.sql.DataFrame): Unit =
+    SparkCounters.measure(spark)(
+      df.write.format("noop").mode("overwrite").save())
+
+  private def listeners(): Int =
+    BusListeners.queryListeners(spark.sparkContext).size
+
+  test("LoadInfo.observed keeps its audit across an unrelated failed query") {
+    val audited = new AtomicLong(-1)
+    val registered = listeners()
+    val inst = LoadInfo.observed((1 to 5).toDF("x"), "load_audit_unrelated",
+      audited.set)
+    intercept[Exception](SparkCounters.measure(spark)(
+      spark.range(1L).select(raise_error(lit("unrelated"))).collect()))
+    writeNoop(inst)
+    assert(audited.get === 5L)
+    assert(listeners() === registered)
+  }
+
+  test("LoadInfo.observed: two loads under one name get their own counts") {
+    val first, second = new AtomicLong(-1)
+    val a = LoadInfo.observed((1 to 5).toDF("x"), "load_audit_same", first.set)
+    val b = LoadInfo.observed((1 to 9).toDF("x"), "load_audit_same", second.set)
+    writeNoop(a)
+    writeNoop(b)
+    assert((first.get, second.get) === ((5L, 9L)))
+  }
+
+  test("LoadInfo.observed: a failed write never audits and stops listening") {
+    val audited = new AtomicLong(-1)
+    val registered = listeners()
+    // one partition: rows 1-5 pass the observation before row 6 fails
+    val failing = spark.range(1L, 11L, 1L, 1)
+      .select(when(col("id") > 5, raise_error(lit("bad row")))
+        .otherwise(col("id")).as("x"))
+    val inst = LoadInfo.observed(failing, "load_audit_failed", audited.set)
+    assert(listeners() === registered + 1)
+    val out = java.nio.file.Files.createTempDirectory("graft-audit").toString
+    intercept[Exception](SparkCounters.measure(spark)(
+      inst.write.mode("overwrite").parquet(out)))
+    assert(audited.get === -1L)
+    assert(listeners() === registered)
   }
 
   test("CommentSync copies column comments case-insensitively") {
