@@ -1,17 +1,26 @@
 package graft
 
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.StageInfo
 
 /** Dev profiling harness, the local[N] stand-in for the Spark UI's stage
   * page. Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.StageProfile q_x"
   * Each query runs SPARK_GRAFT_PROFILE_RUNS times (default 2), printing
   * every run's wall time; the last run is profiled through
-  * `SparkCounters.measure`: a per-stage table, the union of the job
+  * `SparkCounters.measure`: a per-stage table (each stage named by the
+  * operators it ran, `GraftBus.scopeNames`), the union of the job
   * intervals and the driver gap (the query wall with no job running). */
 object StageProfile {
   private def wallMs(si: StageInfo): Long =
     (for { a <- si.submissionTime; b <- si.completionTime } yield b - a)
       .getOrElse(-1L)
+
+  /** The operators the stage ran; its call site when it has no scope. */
+  private def label(si: StageInfo): String =
+    GraftBus.scopeNames(si) match {
+      case Nil => si.name.takeWhile(_ != '\n')
+      case names => names.mkString(", ")
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -42,7 +51,7 @@ object StageProfile {
           f"${si.numTasks}%6d ${m.shuffleReadMetrics.totalBytesRead / 1024}%8d " +
           f"${m.shuffleWriteMetrics.bytesWritten / 1024}%8d " +
           f"${(m.memoryBytesSpilled + m.diskBytesSpilled) / 1024}%6d " +
-          f"${m.jvmGCTime}%6d  ${si.name.takeWhile(_ != '\n').take(60)}")
+          f"${m.jvmGCTime}%6d  ${label(si).take(80)}")
       }
       val taskMs = counts.stages.map(_.taskMetrics.executorRunTime).sum
       val jobMs = counts.jobUnionMs

@@ -95,8 +95,9 @@ object Divergence {
 
   /** Per-bin count state for [[psiFromCounts]] — MERGEABLE (counter
     * addition via [[mergeBinCounts]]), so a continuously-ingested
-    * stream keeps a live drift readout on the StateStream rails
-    * (the Calibration.binCounts pattern). */
+    * stream keeps a live drift readout on the
+    * [[graft.streaming.StateStream]] sink (`binCountModel`; the
+    * Calibration.binCounts pattern). */
   def binCounts(df: DataFrame, binCol: String): DataFrame = df
     .filter(col(binCol).isNotNull)
     .groupBy(col(binCol).as("__b")).agg(count(lit(1)).as("n"))

@@ -44,7 +44,8 @@ object Survival {
   /** MERGEABLE per-time counter state: (t, __n_total, d,
     * censored_at_t) — plain counter addition merges batches
     * ([[mergePerTimeCounts]]), so a continuously-ingested cohort keeps
-    * its full survival machinery live on the StateStream rails without
+    * its full survival machinery live on the
+    * [[graft.streaming.StateStream]] sink (`survivalModel`) without
     * replaying label rows: [[riskTableFromCounts]] /
     * [[kaplanMeierFromCounts]] read the merged state. */
   def perTimeCounts(labels: DataFrame, durationCol: String,

@@ -27,8 +27,9 @@ import graft.similarity.HyperplaneLSH
   * Restart safety, all three failure classes handled loudly or
   * idempotently:
   *  - replayed batch (normal at-least-once foreachBatch): both outputs
-  *    partition by `__batch_id` with dynamic overwrite, and the stored
-  *    read filters to `__batch_id < current`, so a replay overwrites
+  *    are `__batch_id` partitions written by [[StateStream]] (dynamic
+  *    overwrite), and the stored read filters to
+  *    `__batch_id < current`, so a replay overwrites
   *    its own partitions and recomputes against exactly the pre-batch
   *    corpus — a no-op (spec-pinned);
   *  - torn first write / empty directory: the stored table is read with
@@ -42,13 +43,6 @@ import graft.similarity.HyperplaneLSH
   *    dims) plane family so a restart with different parameters cannot
   *    silently join incompatible signatures. */
 object NearDupStream {
-
-  private def writePartitioned(
-      df: DataFrame, path: String, batchId: Long): Unit =
-    df.withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(path)
 
   /** The table's identity: plane family AND column names — a restart
     * with a renamed id/vector column would otherwise resolve the stored
@@ -79,15 +73,6 @@ object NearDupStream {
     SmallFiles.write(fs, new HPath(new HPath(bucketsPath), "_LSH_PARAMS"),
       tag)
 
-  /** Newest stored batch partition, from directory names only (no data
-    * read). Non-partition entries (snapshots, backups) are ignored. */
-  private def maxStoredBatch(fs: FileSystem, path: HPath): Option[Long] =
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("__batch_id="))
-      .flatMap(_.stripPrefix("__batch_id=").toLongOption)
-      .maxOption
-
   /** One micro-batch: pairs completed by `batch` written to
     * `pairsPath/__batch_id=N`, the batch's buckets (derived ONCE, also
     * feeding the pair join) appended to `bucketsPath/__batch_id=N`.
@@ -99,12 +84,8 @@ object NearDupStream {
     val spark = batch.sparkSession
     val target = new HPath(bucketsPath)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    maxStoredBatch(fs, target).foreach { m =>
-      require(batchId >= m,
-        s"batch $batchId is behind the stored bucket table (newest " +
-          s"partition $m) at $bucketsPath — a lost or foreign checkpoint " +
-          "would silently hide the corpus and clobber old partitions; " +
-          "refusing")
+    StateStream.newestBatch(fs, target).foreach { m =>
+      StateStream.requireNotBehind(batchId, m, "bucket table", bucketsPath)
       require(batchId <= m + 1,
         s"batch $batchId skips past the stored bucket table (newest " +
           s"partition $m) at $bucketsPath — the intervening batches' " +
@@ -127,8 +108,8 @@ object NearDupStream {
         bucketsNow,
         stored.filter(col("__batch_id") < batchId).drop("__batch_id"),
         idCol, vecCol, threshold)
-      writePartitioned(pairs, pairsPath, batchId)
-      writePartitioned(bucketsNow, bucketsPath, batchId)
+      StateStream.writeBatch(pairs, batchId, pairsPath)
+      StateStream.writeBatch(bucketsNow, batchId, bucketsPath)
     }
     // pinned only after the batch's writes succeeded: a failed first
     // batch cannot freeze mistaken parameters onto an empty table
@@ -140,11 +121,7 @@ object NearDupStream {
       seed: Long, threshold: Double, bucketsPath: String,
       pairsPath: String, checkpointDir: String, dims: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch((b: DataFrame, id: Long) =>
-        processBatch(b, id, idCol, vecCol, nBits, seed, threshold,
-          bucketsPath, pairsPath, dims))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    StateStream.startBatches(vecs, checkpointDir, trigger)(
+      processBatch(_, _, idCol, vecCol, nBits, seed, threshold,
+        bucketsPath, pairsPath, dims))
 }

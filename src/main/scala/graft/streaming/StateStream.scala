@@ -5,21 +5,24 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.LongType
 
-/** Continuous ingest for ANY mergeable state family —
-  * [[AggStream]]'s storage discipline (per-batch `__batch_id`
-  * partitions, dynamic-overwrite idempotent replays, explicit-schema
-  * torn-write safety, lost-checkpoint refusal, merge-on-read current
-  * view, bounded compaction) factored over a pluggable [[Model]], so
-  * the sketch families — KLL quantiles ([[graft.operators.QuantileSketch]]),
-  * theta sets ([[graft.operators.ThetaSketchOps]]), HLL
-  * ([[graft.operators.SketchState]]) — ride one proven sink instead of
-  * three re-implementations. The family-specific pieces are exactly
-  * two: fold a raw micro-batch to per-key state rows, and merge
-  * accumulated state rows back to one row per key; both must be
-  * associative+commutative per key (every sketch union is), which is
-  * what makes replays and compaction safe.
+/** Continuous ingest for any mergeable state family, over a pluggable
+  * [[Model]]: aggregate partials ([[aggModel]]), sketches (KLL, theta,
+  * Count-Min) and counter states all ride this one sink. Each
+  * micro-batch folds to per-key state rows written as its own
+  * `__batch_id` partition (no read of the accumulated state); the
+  * current view merges the partitions at read time, and [[compact]]
+  * folds them into one when their count grows.
+  *  - replayed batch (at-least-once foreachBatch): dynamic overwrite
+  *    rewrites ITS OWN partition — idempotent (spec-pinned);
+  *  - torn first write: reads use an explicit schema, so an empty or
+  *    `_SUCCESS`-only directory is an empty state;
+  *  - lost checkpoint: a batch id behind the newest stored partition
+  *    refuses loudly instead of silently clobbering history.
+  * Fold and merge must be associative+commutative per key, which is
+  * what makes replays and compaction safe. [[NearDupStream]] writes its
+  * two outputs through the same partition, refusal and start code.
   */
 object StateStream {
 
@@ -28,60 +31,83 @@ object StateStream {
   final case class Model(fold: DataFrame => DataFrame,
       merge: DataFrame => DataFrame)
 
-  private def maxStoredBatch(fs: FileSystem, path: HPath): Option[Long] =
+  /** Newest `__batch_id` partition under `path`, from directory names
+    * only (no data read); other entries are ignored. */
+  private[streaming] def newestBatch(fs: FileSystem,
+      path: HPath): Option[Long] =
     if (!fs.exists(path)) None
     else fs.listStatus(path).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("__batch_id="))
       .flatMap(_.stripPrefix("__batch_id=").toLongOption)
       .maxOption
 
+  /** Refuses `batchId` behind `newest`, the newest partition of the
+    * stored `table` at `path` (batch ids restart under a lost
+    * checkpoint). */
+  private[streaming] def requireNotBehind(batchId: Long, newest: Long,
+      table: String, path: String): Unit =
+    require(batchId >= newest,
+      s"batch $batchId is behind the stored $table (newest partition " +
+        s"$newest) at $path — a lost or foreign checkpoint would " +
+        "silently clobber the stored partitions; refusing")
+
+  /** Writes `df` as partition `__batch_id=batchId` of `path`, replacing
+    * that partition only (a replay rewrites its own output). */
+  private[streaming] def writeBatch(df: DataFrame, batchId: Long,
+      path: String): Unit =
+    df.withColumn("__batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id").parquet(path)
+
+  /** Starts a query running `batch` on each micro-batch of `rows`. */
+  private[streaming] def startBatches(rows: DataFrame, checkpointDir: String,
+      trigger: Trigger)(batch: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .foreachBatch(batch)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .start()
+
   /** One micro-batch: fold and write its state partition. Public so
     * batch backfills and tests drive the exact sink logic. */
   def processBatch(batch: DataFrame, batchId: Long, model: Model,
       statePath: String): Unit = {
-    val spark = batch.sparkSession
     val target = new HPath(statePath)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    maxStoredBatch(fs, target).foreach { m =>
-      require(batchId >= m,
-        s"batch $batchId is behind the stored state (newest partition $m) " +
-          s"at $statePath — a lost or foreign checkpoint would silently " +
-          "clobber accumulated state; refusing")
-    }
-    model.fold(batch)
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(statePath)
+    val fs = target.getFileSystem(
+      batch.sparkSession.sessionState.newHadoopConf())
+    newestBatch(fs, target).foreach(
+      requireNotBehind(batchId, _, "state", statePath))
+    writeBatch(model.fold(batch), batchId, statePath)
   }
 
-  /** State schema for explicit-schema reads, derived from an empty fold
-    * so it always matches what [[processBatch]] writes. */
-  private def stateSchema(template: DataFrame, model: Model): StructType =
-    model.fold(template.limit(0)).schema.add("__batch_id", LongType)
+  /** Every stored state row, read with an explicit schema derived from
+    * an empty fold (so it always matches what [[processBatch]] writes):
+    * an empty or torn directory reads as no rows. */
+  private def stored(spark: SparkSession, template: DataFrame, model: Model,
+      statePath: String): DataFrame =
+    spark.read
+      .schema(model.fold(template.limit(0)).schema.add("__batch_id", LongType))
+      .parquet(statePath)
+      .drop("__batch_id")
 
   /** Current merged state: one row per key. `template` supplies the raw
     * input columns (usually the source DataFrame). */
   def current(spark: SparkSession, template: DataFrame, model: Model,
       statePath: String): DataFrame =
-    model.merge(spark.read
-      .schema(stateSchema(template, model))
-      .parquet(statePath)
-      .drop("__batch_id"))
+    model.merge(stored(spark, template, model, statePath))
 
-  /** Fold all partitions into one carrying the newest batch id.
+  /** Fold all partitions into one carrying the newest batch id, so
+    * ingestion continues from the right refusal guard.
     *
     * Crash-atomic via the [[graft.core.AtomicParquet]] staged-rename
-    * swap: the merged-everything state is written to a staging
-    * directory and the whole state dir is swapped in one rename
-    * protocol, so no failure point can leave BOTH the merged result
-    * and the stale per-batch partitions visible together. That matters
-    * because `Model.merge` is only required to be associative and
-    * commutative — NOT idempotent under re-merging already-included
-    * state (theta/HLL unions are; KLL re-merge doubles item weights;
-    * a plain sum model would silently double-count) — so the previous
-    * overwrite-newest-then-delete-stale sequence had a window where a
-    * crash double-counted every prior batch on the next merge-on-read.
+    * swap: the merged state is written to a staging directory and the
+    * whole state dir is swapped in one rename protocol, so no failure
+    * point can leave BOTH the merged result and the stale per-batch
+    * partitions visible together. That matters because `Model.merge` is
+    * only required to be associative and commutative — NOT idempotent
+    * under re-merging already-included state (theta/HLL unions are; KLL
+    * re-merge doubles item weights; [[aggModel]]'s sums double-count).
     * Must not run concurrently with an active [[start]] sink on the
     * same path (same single-writer discipline as the per-batch sink
     * itself; the rename window would also race `processBatch`'s
@@ -90,11 +116,8 @@ object StateStream {
       statePath: String): Unit = {
     val target = new HPath(statePath)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    maxStoredBatch(fs, target).foreach { newest =>
-      val stored = spark.read
-        .schema(stateSchema(template, model))
-        .parquet(statePath)
-      val merged = model.merge(stored.drop("__batch_id"))
+    newestBatch(fs, target).foreach { newest =>
+      val merged = model.merge(stored(spark, template, model, statePath))
         .withColumn("__batch_id", lit(newest))
       graft.core.AtomicParquet.overwrite(
         merged, statePath, partitionCols = Seq("__batch_id"))
@@ -105,12 +128,15 @@ object StateStream {
   def start(rows: DataFrame, model: Model, statePath: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rows.writeStream
-      .foreachBatch((b: DataFrame, id: Long) =>
-        processBatch(b, id, model, statePath))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(rows, checkpointDir, trigger)(
+      processBatch(_, _, model, statePath))
+
+  /** Ready-made model: [[graft.operators.IncrementalAgg]] partial
+    * aggregates of `valueCol` per key; the finals of the current view
+    * are `IncrementalAgg.finalize(current(...), keys)`. */
+  def aggModel(keys: Seq[String], valueCol: String): Model = Model(
+    fold = graft.operators.IncrementalAgg.state(_, keys, valueCol),
+    merge = s => graft.operators.IncrementalAgg.merge(Seq(s), keys))
 
   /** Ready-made model: KLL quantile state over `valueCol`. */
   def kllModel(keys: Seq[String], valueCol: String,

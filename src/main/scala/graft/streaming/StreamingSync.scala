@@ -52,10 +52,11 @@ object StreamingSync {
         // just this micro-batch. The probe goes through the Hadoop
         // FileSystem for destPath's scheme (local, hdfs://, ...), and
         // AtomicParquet.exists also restores a crash-stranded .__old__
-        // generation before answering.
+        // generation before answering. AtomicParquet.read takes the
+        // schema from a footer, so no schema-inference job runs per batch.
         val dest =
           if (graft.core.AtomicParquet.exists(spark, destPath))
-            spark.read.parquet(destPath)
+            graft.core.AtomicParquet.read(spark, destPath)
           else batch.limit(0)
         // Staged write + rename swap (AtomicParquet): the merge plan reads
         // the current generation while the new one lands in staging, then

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.BusListeners
+import org.apache.spark.{BusListeners, GraftBus}
 import org.apache.spark.sql.functions._
 
 class SparkCountersSpec extends SparkSpec {
@@ -70,6 +70,16 @@ class SparkCountersSpec extends SparkSpec {
     assert(ran >= 4) // 3 map tasks and at least one reduce task
     assert(counts.stages.map(_.numTasks).sum === ran)
     assert(counts.stages.forall(_.completionTime.isDefined))
+  }
+
+  test("the stages of a measured shuffle join carry an Exchange label") {
+    val left = spark.range(0L, 1000L, 1L, 3).select(col("id").as("k"))
+    val right = spark.range(0L, 500L, 1L, 2).select(col("id").as("k"))
+    val (n, counts) = SparkCounters.measure(spark)(
+      left.join(right.hint("shuffle_merge"), "k").count())
+    assert(n === 500L)
+    val labels = counts.stages.map(GraftBus.scopeNames)
+    assert(labels.exists(_.contains("Exchange")), labels)
   }
 
   test("the listener and the job group are removed after a body that throws") {

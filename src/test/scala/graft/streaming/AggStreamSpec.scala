@@ -8,10 +8,17 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.IncrementalAgg
 
+/** The aggregate state sink: [[StateStream]] with
+  * [[StateStream.aggModel]], finalized by [[IncrementalAgg.finalize]]. */
 class AggStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private val keys = Seq("event_type")
+  private val model = StateStream.aggModel(keys, "value")
+
+  private def current(template: DataFrame, state: String) =
+    IncrementalAgg.finalize(
+      StateStream.current(spark, template, model, state), keys)
 
   private def finals(df: DataFrame) =
     df.as[(String, Long, Long, Option[Double], Option[Double],
@@ -34,11 +41,11 @@ class AggStreamSpec extends SparkSpec {
       third.coalesce(1).write.mode("append").parquet(in)
       val src = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = AggStream.start(src, keys, "value", state, ckpt)
+      val q = StateStream.start(src, model, state, ckpt)
       q.awaitTermination()
       assert(!q.isActive)
     }
-    val got = finals(AggStream.current(spark, ev, keys, "value", state))
+    val got = finals(current(ev, state))
     assert(got == finals(direct(ev)))
     assert(got.nonEmpty)
 
@@ -46,32 +53,30 @@ class AggStreamSpec extends SparkSpec {
     // no-op (dynamic overwrite of its own partition)
     val newest = spark.read.parquet(state)
       .select(max(col("__batch_id")).cast("long")).head().getLong(0)
-    AggStream.processBatch(thirds.last, newest, keys, "value", state)
-    assert(finals(AggStream.current(spark, ev, keys, "value", state))
-      == finals(direct(ev)))
+    StateStream.processBatch(thirds.last, newest, model, state)
+    assert(finals(current(ev, state)) == finals(direct(ev)))
 
     // lost-checkpoint guard: a batch id behind the stored partitions
     // refuses loudly
     val boom = intercept[IllegalArgumentException] {
-      AggStream.processBatch(thirds.head, 0L, keys, "value", state)
+      StateStream.processBatch(thirds.head, 0L, model, state)
     }
     assert(boom.getMessage.contains("behind the stored state"))
 
     // compaction folds to ONE partition, preserving finals and the
     // newest batch id (so ingestion continues from the right guard)
-    AggStream.compact(spark, ev, keys, "value", state)
+    StateStream.compact(spark, ev, model, state)
     val parts = new java.io.File(state).listFiles()
       .filter(_.getName.startsWith("__batch_id=")).map(_.getName).toSeq
     assert(parts == Seq(s"__batch_id=$newest"))
-    assert(finals(AggStream.current(spark, ev, keys, "value", state))
-      == finals(direct(ev)))
+    assert(finals(current(ev, state)) == finals(direct(ev)))
 
     // and the NEXT batch still folds in after compaction
     val extra = Seq(("click", 5.0), ("click", null.asInstanceOf[Any]))
       .map { case (t, v) => (t, Option(v).map(_.asInstanceOf[Double])) }
       .toDF("event_type", "value")
-    AggStream.processBatch(extra, newest + 1, keys, "value", state)
-    val after = finals(AggStream.current(spark, ev, keys, "value", state))
+    StateStream.processBatch(extra, newest + 1, model, state)
+    val after = finals(current(ev, state))
     val before = finals(direct(ev))
     assert(after("click")._1 == before("click")._1 + 2)
     assert(after("click")._2 == before("click")._2 + 1)
@@ -84,7 +89,7 @@ class AggStreamSpec extends SparkSpec {
     Files.write(java.nio.file.Paths.get(s"$state/_SUCCESS"),
       Array.empty[Byte])
     val template = Seq(("a", 1.0)).toDF("event_type", "value")
-    val got = AggStream.current(spark, template, keys, "value", state)
+    val got = current(template, state)
     assert(got.count() == 0)
   }
 }
