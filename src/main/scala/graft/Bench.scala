@@ -79,12 +79,13 @@ object Bench {
     // runs with these are how a diffuse pass-level reading is separated
     // into "plan got slower" vs "the pass's own JVM aging"
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(Harness.parseNames("SPARK_GRAFT_ONLY", _,
+        SparkEntry.all.map(_.name).toSet))
       .getOrElse(Set.empty[String])
     // gates the per-QUERY System.gc() between timed queries (the
     // checkpoint-block release that prevents cross-query drift); set
     // SPARK_GRAFT_GC=0 only for drift-diagnosis A/B runs
-    val gcPerQuery = sys.env.getOrElse("SPARK_GRAFT_GC", "1") == "1"
+    val gcPerQuery = Harness.switchEnv("SPARK_GRAFT_GC", default = true)
     // Session-recycle chunk size. Pass-level aging is MEASURED (r13
     // diagnostics over the 349-query quiet pass): per-query readings
     // inflate monotonically with position — geomean vs the r11 quiet

@@ -27,6 +27,29 @@ object Harness {
     n.get
   }
 
+  /** The 0/1 switch in env var `name`, `default` when unset. */
+  def switchEnv(name: String, default: Boolean): Boolean =
+    sys.env.get(name).fold(default)(parseSwitch(name, _))
+
+  private[graft] def parseSwitch(name: String, raw: String): Boolean =
+    raw match {
+      case "1" => true
+      case "0" => false
+      case _ => throw new IllegalArgumentException(
+        s"$name must be 0 or 1, got '$raw'")
+    }
+
+  /** The comma-separated names in `raw` (blanks dropped); a name not in
+    * `known` fails, so a misspelling cannot silently select less. */
+  private[graft] def parseNames(name: String, raw: String,
+      known: Set[String]): Set[String] = {
+    val names = raw.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names.diff(known).toSeq.sorted
+    require(unknown.isEmpty,
+      s"$name names unknown entries: ${unknown.mkString(", ")}")
+    names
+  }
+
   /** Core count of `session(default)`. */
   def cpusFromEnv(default: Int): Int =
     positiveIntEnv("SPARK_GRAFT_CPUS", default)

@@ -1,11 +1,6 @@
 package graft.operators
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
-
-import org.apache.datasketches.kll.KllDoublesSketch
-import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Mergeable quantile-sketch state tables (DataSketches KLL) — the
@@ -28,109 +23,48 @@ import org.apache.spark.sql.functions._
   * that regime by rank-error bound instead of equality (the one sketch
   * in this library whose scale regime is bounded, not replayed).
   *
-  * Buffers ride Java serialization with explicit sketch hooks (the
-  * library's own compact binary form travels, not object internals).
+  * Like [[SketchState]], every step is one of Spark's built-in
+  * DataSketches expressions (`kll_sketch_agg_double`,
+  * `kll_merge_agg_double`, `kll_sketch_get_quantile_double`); sketches
+  * written by the DataSketches library directly read the same way.
   */
 object QuantileSketch {
-
-  /** Serializable carrier for a heap KLL sketch. */
-  final class Wrap(var k: Int) extends Serializable {
-    @transient private var sk: KllDoublesSketch = _
-    def sketch: KllDoublesSketch = {
-      if (sk == null) sk = KllDoublesSketch.newHeapInstance(k)
-      sk
-    }
-    def absorb(bytes: Array[Byte]): Unit =
-      sketch.merge(KllDoublesSketch.heapify(Memory.wrap(bytes)))
-
-    @throws[IOException]
-    private def writeObject(out: ObjectOutputStream): Unit = {
-      out.writeInt(k)
-      val b = sketch.toByteArray
-      out.writeInt(b.length)
-      out.write(b)
-    }
-    @throws[IOException]
-    private def readObject(in: ObjectInputStream): Unit = {
-      k = in.readInt()
-      val b = new Array[Byte](in.readInt())
-      in.readFully(b)
-      sk = KllDoublesSketch.newHeapInstance(k)
-      sk.merge(KllDoublesSketch.heapify(Memory.wrap(b)))
-    }
-  }
-
-  private abstract class WrapAgg[IN](k: Int)
-      extends Aggregator[IN, Wrap, Array[Byte]] {
-    def zero: Wrap = new Wrap(k)
-    def merge(a: Wrap, b: Wrap): Wrap = { a.sketch.merge(b.sketch); a }
-    def finish(b: Wrap): Array[Byte] = b.sketch.toByteArray
-    def bufferEncoder: Encoder[Wrap] = Encoders.javaSerialization[Wrap]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  private final class BuildAgg(k: Int) extends WrapAgg[java.lang.Double](k) {
-    def reduce(b: Wrap, v: java.lang.Double): Wrap = {
-      if (v != null) b.sketch.update(v.doubleValue()); b
-    }
-  }
-
-  private final class UnionAgg(k: Int) extends WrapAgg[Array[Byte]](k) {
-    def reduce(b: Wrap, bytes: Array[Byte]): Wrap = {
-      if (bytes != null) b.absorb(bytes); b
-    }
-  }
-
-  /** Union to one sketch per group, then read the requested quantiles
-    * (INCLUSIVE search: the value at 1-based rank ⌈q·n⌉). */
-  private final class QuantAgg(k: Int, qs: Seq[Double])
-      extends Aggregator[Array[Byte], Wrap, Seq[Double]] {
-    def zero: Wrap = new Wrap(k)
-    def reduce(b: Wrap, bytes: Array[Byte]): Wrap = {
-      if (bytes != null) b.absorb(bytes); b
-    }
-    def merge(a: Wrap, b: Wrap): Wrap = { a.sketch.merge(b.sketch); a }
-    def finish(b: Wrap): Seq[Double] =
-      if (b.sketch.isEmpty) Seq.fill(qs.length)(Double.NaN)
-      else qs.map(q => b.sketch.getQuantile(q))
-    def bufferEncoder: Encoder[Wrap] = Encoders.javaSerialization[Wrap]
-    def outputEncoder: Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  }
 
   /** Build (or rebuild for one ingest batch) the state: one row per key
     * tuple with a binary KLL `qsketch` over `valueCol` (nulls skipped). */
   def build(df: DataFrame, keyCols: Seq[String], valueCol: String,
-      k: Int = 200): DataFrame = {
-    val agg = udaf(new BuildAgg(k))
+      k: Int = 200): DataFrame =
     df.groupBy(keyCols.map(col): _*)
-      .agg(agg(col(valueCol).cast("double")).as("qsketch"))
-  }
+      .agg(kll_sketch_agg_double(col(valueCol).cast("double"), k)
+        .as("qsketch"))
 
   /** Fold a batch's state into stored state: same keys merge by sketch
     * union, new keys pass through — key-sized shuffle of binaries. */
   def merge(stored: DataFrame, batch: DataFrame, keyCols: Seq[String],
-      k: Int = 200): DataFrame = {
-    val agg = udaf(new UnionAgg(k))
+      k: Int = 200): DataFrame =
     stored.unionByName(batch)
       .groupBy(keyCols.map(col): _*)
-      .agg(agg(col("qsketch")).as("qsketch"))
-  }
+      .agg(kll_merge_agg_double(col("qsketch"), k).as("qsketch"))
 
   /** Roll the state up to `groupCols` (⊆ build keys) and read quantiles:
-    * (groupCols…, q, value) — one output row per group × quantile. */
+    * (groupCols…, q, value) — one output row per group × quantile, by
+    * INCLUSIVE search (the value at 1-based rank ⌈q·n⌉); NaN for every
+    * q of a group whose sketch is empty (all its values were null). */
   def quantiles(state: DataFrame, groupCols: Seq[String], qs: Seq[Double],
       k: Int = 200): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantile ranks must be in (0, 1], got $qs")
-    val agg = udaf(new QuantAgg(k, qs))
-    val grouped = state.groupBy(groupCols.map(col): _*)
-      .agg(agg(col("qsketch")).as("__qv"))
-    grouped
+    val (sketch, ranks) = (col("__qs"), array(qs.map(lit): _*))
+    state.groupBy(groupCols.map(col): _*)
+      .agg(kll_merge_agg_double(col("qsketch"), k).as("__qs"))
       .select(groupCols.map(col) :+
-        posexplode(col("__qv")).as(Seq("__pos", "value")): _*)
+        posexplode(
+          when(kll_sketch_get_n_double(sketch) === 0,
+            array(qs.map(_ => lit(Double.NaN)): _*))
+            .otherwise(kll_sketch_get_quantile_double(sketch, ranks)))
+          .as(Seq("__pos", "value")): _*)
       .select(groupCols.map(col) ++ Seq(
-        element_at(array(qs.map(lit): _*), col("__pos") + 1).as("q"),
+        element_at(ranks, col("__pos") + 1).as("q"),
         col("value")): _*)
   }
 }

@@ -1,11 +1,6 @@
 package graft.operators
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
-
-import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, Intersection, SetOperation, Sketches, Union, UpdateSketch}
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Theta sketch state tables — distinct counting with a full SET
@@ -25,188 +20,57 @@ import org.apache.spark.sql.functions._
   * compound it; the spec gates that regime by error bound.
   *
   * All set ops are per-key over state tables: one key-sized shuffle of
-  * compact binaries regardless of corpus history. Union and
-  * intersection are associative+commutative, so they ride the same
-  * Aggregator machinery as the other sketch families; A\B is derived as
-  * |A| − |A∩B| (exact in the exact regime, documented estimate beyond).
+  * compact binaries regardless of corpus history. Like [[SketchState]],
+  * every step is one of Spark's built-in DataSketches expressions
+  * (`theta_sketch_agg`, `theta_union_agg`, `theta_union`,
+  * `theta_intersection`, `theta_sketch_estimate`), so Catalyst sees
+  * the whole plan; A\B is derived as |A| − |A∩B| (exact in the exact
+  * regime, documented estimate beyond). Compact sketches written by the
+  * DataSketches library directly read the same way.
   */
 object ThetaSketchOps {
-
-  /** Serializable carrier for an in-progress union. Raw items buffer in
-    * an UpdateSketch (O(1) per row) and flush into the union lazily. */
-  final class UnionWrap(var lgK: Int) extends Serializable {
-    @transient private var u: Union = _
-    @transient private var upd: UpdateSketch = _
-    def updateItem(v: String): Unit = {
-      if (upd == null)
-        upd = UpdateSketch.builder().setLogNominalEntries(lgK).build()
-      upd.update(v)
-    }
-    private def union0: Union = {
-      if (u == null)
-        u = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-      u
-    }
-    def union: Union = {
-      if (upd != null) { union0.union(upd.compact()); upd = null }
-      union0
-    }
-    def result: CompactSketch = union.getResult
-    @throws[IOException]
-    private def writeObject(out: ObjectOutputStream): Unit = {
-      out.writeInt(lgK)
-      val b = result.toByteArray
-      out.writeInt(b.length); out.write(b)
-    }
-    @throws[IOException]
-    private def readObject(in: ObjectInputStream): Unit = {
-      lgK = in.readInt()
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      u = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-      u.union(Sketches.wrapCompactSketch(Memory.wrap(b)))
-    }
-  }
-
-  /** Serializable carrier for an in-progress intersection. An
-    * intersection that has absorbed nothing is the identity (universal
-    * set), tracked with `touched` so empty groups don't claim infinity. */
-  final class InterWrap(var touched: Boolean) extends Serializable {
-    @transient private var i: Intersection = _
-    def inter: Intersection = {
-      if (i == null) i = SetOperation.builder().buildIntersection()
-      i
-    }
-    @throws[IOException]
-    private def writeObject(out: ObjectOutputStream): Unit = {
-      out.writeBoolean(touched)
-      if (touched) {
-        val b = inter.getResult.toByteArray
-        out.writeInt(b.length); out.write(b)
-      }
-    }
-    @throws[IOException]
-    private def readObject(in: ObjectInputStream): Unit = {
-      touched = in.readBoolean()
-      i = SetOperation.builder().buildIntersection()
-      if (touched) {
-        val b = new Array[Byte](in.readInt()); in.readFully(b)
-        i.intersect(Sketches.wrapCompactSketch(Memory.wrap(b)))
-      }
-    }
-  }
-
-  private final class BuildAgg(lgK: Int)
-      extends Aggregator[String, UnionWrap, Array[Byte]] {
-    def zero: UnionWrap = new UnionWrap(lgK)
-    def reduce(b: UnionWrap, v: String): UnionWrap = {
-      if (v != null) b.updateItem(v)
-      b
-    }
-    def merge(a: UnionWrap, b: UnionWrap): UnionWrap = {
-      a.union.union(b.result); a
-    }
-    def finish(b: UnionWrap): Array[Byte] = b.result.toByteArray
-    def bufferEncoder: Encoder[UnionWrap] = Encoders.javaSerialization[UnionWrap]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  private final class UnionAgg(lgK: Int)
-      extends Aggregator[Array[Byte], UnionWrap, Array[Byte]] {
-    def zero: UnionWrap = new UnionWrap(lgK)
-    def reduce(b: UnionWrap, bytes: Array[Byte]): UnionWrap = {
-      if (bytes != null)
-        b.union.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
-      b
-    }
-    def merge(a: UnionWrap, b: UnionWrap): UnionWrap = {
-      a.union.union(b.result); a
-    }
-    def finish(b: UnionWrap): Array[Byte] = b.result.toByteArray
-    def bufferEncoder: Encoder[UnionWrap] = Encoders.javaSerialization[UnionWrap]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  private final class IntersectEstAgg
-      extends Aggregator[Array[Byte], InterWrap, Double] {
-    def zero: InterWrap = new InterWrap(false)
-    def reduce(b: InterWrap, bytes: Array[Byte]): InterWrap = {
-      if (bytes != null) {
-        b.inter.intersect(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
-        b.touched = true
-      }
-      b
-    }
-    def merge(a: InterWrap, b: InterWrap): InterWrap = {
-      if (b.touched) {
-        a.inter.intersect(b.inter.getResult)
-        a.touched = true
-      }
-      a
-    }
-    def finish(b: InterWrap): Double =
-      if (b.touched) b.inter.getResult.getEstimate else Double.NaN
-    def bufferEncoder: Encoder[InterWrap] = Encoders.javaSerialization[InterWrap]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
-  private final class EstimateAgg(lgK: Int)
-      extends Aggregator[Array[Byte], UnionWrap, Double] {
-    def zero: UnionWrap = new UnionWrap(lgK)
-    def reduce(b: UnionWrap, bytes: Array[Byte]): UnionWrap = {
-      if (bytes != null)
-        b.union.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
-      b
-    }
-    def merge(a: UnionWrap, b: UnionWrap): UnionWrap = {
-      a.union.union(b.result); a
-    }
-    def finish(b: UnionWrap): Double = b.result.getEstimate
-    def bufferEncoder: Encoder[UnionWrap] = Encoders.javaSerialization[UnionWrap]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
 
   /** Build (or rebuild for one batch) the state: one row per key with a
     * compact theta `tsketch` of distinct `valueCol` strings. */
   def build(df: DataFrame, keyCols: Seq[String], valueCol: String,
-      lgK: Int = 12): DataFrame = {
-    val agg = udaf(new BuildAgg(lgK))
+      lgK: Int = 12): DataFrame =
     df.filter(col(valueCol).isNotNull)
       .groupBy(keyCols.map(col): _*)
-      .agg(agg(col(valueCol).cast("string")).as("tsketch"))
-  }
+      .agg(theta_sketch_agg(col(valueCol).cast("string"), lgK).as("tsketch"))
 
   /** Fold batch state into stored state by per-key union. */
   def merge(stored: DataFrame, batch: DataFrame, keyCols: Seq[String],
-      lgK: Int = 12): DataFrame = {
-    val agg = udaf(new UnionAgg(lgK))
+      lgK: Int = 12): DataFrame =
     stored.unionByName(batch)
       .groupBy(keyCols.map(col): _*)
-      .agg(agg(col("tsketch")).as("tsketch"))
-  }
+      .agg(theta_union_agg(col("tsketch"), lgK).as("tsketch"))
 
   /** Per-key set algebra between two state tables: keys present in BOTH
     * sides (inner semantics — an absent side has no sketch to intersect)
     * with n_a, n_b, n_union, n_intersection, n_a_not_b = n_a − n_a∩b.
-    * Exact integers while both sketches are under capacity. */
+    * Each side's rows for a key are unioned first, so a side may hold
+    * several rows per key. All columns are doubles; exact integers while
+    * both sketches are under capacity. */
   def overlap(a: DataFrame, b: DataFrame, keyCols: Seq[String],
       lgK: Int = 12): DataFrame = {
     val tagged = a.select(keyCols.map(col) :+ col("tsketch") :+
         lit("a").as("__side"): _*)
       .unionByName(b.select(keyCols.map(col) :+ col("tsketch") :+
         lit("b").as("__side"): _*))
-    val est = udaf(new EstimateAgg(lgK))
-    val inter = udaf(new IntersectEstAgg)
+    def side(s: String) =
+      theta_union_agg(when(col("__side") === s, col("tsketch")), lgK)
+    def est(sketch: Column) =
+      theta_sketch_estimate(sketch).cast("double")
     tagged.groupBy(keyCols.map(col): _*)
-      .agg(
-        est(when(col("__side") === "a", col("tsketch"))).as("n_a"),
-        est(when(col("__side") === "b", col("tsketch"))).as("n_b"),
-        est(col("tsketch")).as("n_union"),
-        inter(col("tsketch")).as("n_intersection"),
+      .agg(side("a").as("__sa"), side("b").as("__sb"),
         count_if(col("__side") === "a").as("__ca"),
         count_if(col("__side") === "b").as("__cb"))
       .filter(col("__ca") > 0 && col("__cb") > 0)
-      .select(keyCols.map(col) ++ Seq(col("n_a"), col("n_b"),
-        col("n_union"), col("n_intersection"),
-        (col("n_a") - col("n_intersection")).as("n_a_not_b")): _*)
+      .select(keyCols.map(col) ++ Seq(
+        est(col("__sa")).as("n_a"), est(col("__sb")).as("n_b"),
+        est(theta_union(col("__sa"), col("__sb"), lgK)).as("n_union"),
+        est(theta_intersection(col("__sa"), col("__sb")))
+          .as("n_intersection")): _*)
+      .withColumn("n_a_not_b", col("n_a") - col("n_intersection"))
   }
 }

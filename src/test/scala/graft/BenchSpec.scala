@@ -20,6 +20,32 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
+  test("SPARK_GRAFT_GC is 0 or 1 or fails loudly") {
+    assert(Harness.parseSwitch("SPARK_GRAFT_GC", "1"))
+    assert(!Harness.parseSwitch("SPARK_GRAFT_GC", "0"))
+    for (bad <- Seq("", "true", "yes", "on", "off", "false", " 1", "2")) {
+      val e = intercept[IllegalArgumentException](
+        Harness.parseSwitch("SPARK_GRAFT_GC", bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_GC"))
+      assert(e.getMessage.contains(s"'$bad'"))
+    }
+  }
+
+  test("SPARK_GRAFT_ONLY selects known query names or fails naming " +
+    "the unknown ones") {
+    val known = SparkEntry.all.map(_.name).toSet
+    val parse = Harness.parseNames("SPARK_GRAFT_ONLY", _: String, known)
+    assert(parse("q_triangles, q_pagerank,") ===
+      Set("q_triangles", "q_pagerank"))
+    assert(parse("") === Set.empty)
+    val e = intercept[IllegalArgumentException](
+      parse("q_triangles,q_pagernak,q_nope"))
+    assert(e.getMessage.contains("SPARK_GRAFT_ONLY"))
+    assert(e.getMessage.contains("q_pagernak"))
+    assert(e.getMessage.contains("q_nope"))
+    assert(!e.getMessage.contains("q_triangles"))
+  }
+
   test("the contract line parses from the last 2000 chars of stdout") {
     val results = SparkEntry.all.map(_.name).zipWithIndex
       .map { case (n, i) => n -> (0.6 + i % 50 * 0.137) }

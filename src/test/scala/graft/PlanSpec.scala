@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-quality regression tests: the scale claims (pushdown, pruning,
@@ -90,6 +91,19 @@ class PlanSpec extends SparkSpec {
     val udfs = q.optimizedPlan.flatMap(_.expressions)
       .filter(_.exists(_.isInstanceOf[ScalaUDF]))
     assert(udfs.isEmpty, s"Scala UDF in plan: $udfs")
+  }
+
+  test("q_theta_overlap and q_quantile_state build sketches with " +
+    "Catalyst aggregates, not a Scala Aggregator") {
+    for (name <- Seq("q_theta_overlap", "q_quantile_state")) {
+      val q = SparkEntry.queries(name)(spark, dir).queryExecution
+      val typed = q.optimizedPlan.flatMap(_.expressions)
+        .filter(_.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]))
+      assert(typed.isEmpty, s"Scala Aggregator in $name plan: $typed")
+      assert(q.optimizedPlan.toString.contains(
+        if (name == "q_theta_overlap") "theta_union_agg"
+        else "kll_merge_agg_double"), s"sketch aggregate missing from $name")
+    }
   }
 
   test("q_packing runs as one window sort per shard, no extra exchange") {

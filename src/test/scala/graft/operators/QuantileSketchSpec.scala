@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -56,6 +57,39 @@ class QuantileSketchSpec extends SparkSpec {
         QuantileSketch.build(df, Seq("g"), "v"), Seq("g"), Seq(0.5))
       .select("value").as[Double].collect().head
     assert(out == 10.0) // ceil(0.5·2) = 1st of {10, 30}
+  }
+
+  test("a group whose values are all null yields NaN for every q") {
+    val df = Seq(("k", Some(1.0)), ("k", Some(2.0)), ("nulls", None),
+      ("nulls", None)).toDF("g", "v")
+    val out = QuantileSketch.quantiles(
+        QuantileSketch.build(df, Seq("g"), "v"), Seq("g"), Seq(0.5, 1.0))
+      .as[(String, Double, Double)].collect()
+    val nulls = out.filter(_._1 == "nulls")
+    assert(nulls.map(_._2).toSet == Set(0.5, 1.0))
+    assert(nulls.forall(_._3.isNaN), nulls.toSeq)
+    assert(out.filter(_._1 == "k").map(r => r._2 -> r._3).toMap ==
+      Map(0.5 -> 1.0, 1.0 -> 2.0))
+  }
+
+  test("state bytes written by the DataSketches library directly merge " +
+    "and read like freshly built state") {
+    val vals = (1 to 50).map(_.toDouble)
+    val sk = KllDoublesSketch.newHeapInstance(200)
+    vals.foreach(v => sk.update(v))
+    val stored = Seq(("k", sk.toByteArray)).toDF("g", "qsketch")
+    val fresh = QuantileSketch.build(
+      vals.map(v => ("k", v)).toDF("g", "v"), Seq("g"), "v")
+    val qs = Seq(0.1, 0.5, 0.9, 1.0)
+    def read(state: org.apache.spark.sql.DataFrame) =
+      QuantileSketch.quantiles(state, Seq("g"), qs)
+        .as[(String, Double, Double)].collect().toSet
+    assert(read(stored) == read(fresh))
+    val batch = QuantileSketch.build(
+      (51 to 100).map(i => ("k", i.toDouble)).toDF("g", "v"), Seq("g"), "v")
+    val all = QuantileSketch.build(
+      (1 to 100).map(i => ("k", i.toDouble)).toDF("g", "v"), Seq("g"), "v")
+    assert(read(QuantileSketch.merge(stored, batch, Seq("g"))) == read(all))
   }
 
   test("approximate regime honors the published rank-error envelope") {

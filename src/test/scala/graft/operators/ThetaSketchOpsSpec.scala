@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.datasketches.theta.UpdateSketch
+
 import graft.SparkSpec
 
 class ThetaSketchOpsSpec extends SparkSpec {
@@ -27,6 +29,39 @@ class ThetaSketchOpsSpec extends SparkSpec {
       .as[(String, Double, Double, Double, Double, Double)].collect()
     assert(out.map(_._1).toSet == Set("both"))
     assert(out.head._5 == 0.0) // disjoint values -> empty intersection
+  }
+
+  test("several rows per key on one side are unioned before the " +
+    "intersection") {
+    // A holds {1,2} and {3} as two rows of key k; B holds {1,3}
+    val a = state(Seq("k" -> "1", "k" -> "2"))
+      .unionByName(state(Seq("k" -> "3")))
+    val b = state(Seq("k" -> "1", "k" -> "3"))
+    val r = ThetaSketchOps.overlap(a, b, Seq("g"))
+      .as[(String, Double, Double, Double, Double, Double)].collect()
+    assert(r.toSeq == Seq(("k", 3.0, 2.0, 3.0, 2.0, 1.0)))
+  }
+
+  test("state bytes written by the DataSketches library directly merge " +
+    "and intersect like freshly built state") {
+    def libraryBytes(vs: Seq[String]): Array[Byte] = {
+      val u = UpdateSketch.builder().setLogNominalEntries(12).build()
+      vs.foreach(v => u.update(v))
+      u.compact().toByteArray
+    }
+    val aVals = (1 to 60).map(i => s"u$i")
+    val bVals = (41 to 100).map(i => s"u$i")
+    val stored = Seq(("k", libraryBytes(aVals))).toDF("g", "tsketch")
+    val fresh = state(aVals.map("k" -> _))
+    val b = state(bVals.map("k" -> _))
+    def row(x: org.apache.spark.sql.DataFrame) =
+      ThetaSketchOps.overlap(x, b, Seq("g"))
+        .as[(String, Double, Double, Double, Double, Double)].collect().head
+    assert(row(stored) == row(fresh))
+    assert(row(stored) == (("k", 60.0, 60.0, 100.0, 20.0, 40.0)))
+    val merged = ThetaSketchOps.merge(stored, state(Seq("k" -> "u999")),
+      Seq("g"))
+    assert(row(merged)._2 == 61.0)
   }
 
   test("merge of batch states equals a single build (exact regime)") {
